@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from avro_conversions_spark.functions.vectors import to_double
+from avro_conversions_spark.session import persist_for_replay
 
 
 def _dist2(v: Column, c: Column) -> Column:
@@ -103,26 +104,18 @@ def kmeans_fit_assign(
     k: int = 8,
     iters: int = 3,
     with_distance: bool = False,
-    persist_points: bool | None = None,
 ) -> DataFrame:
     """Lloyd's k-means with the deterministic contract above; returns
     (id_col, cluster[, dist2]). ``iters`` centroid updates, then one
     final assignment against the post-update centroids.
 
-    ``persist_points``: each iteration re-reads the input (assign +
-    update share one scan, but iterations don't); recompute wins on
-    local page-cache profiles (round-3/4 finding), persist on remote
-    object storage where iters+1 corpus scans dominate. Default None =
-    resolve from the session-wide ``remote_storage`` flag."""
-    if persist_points is None:
-        from avro_conversions_spark.session import remote_storage
-
-        persist_points = remote_storage(df.sparkSession)
-    pts = df.select(
-        F.col(id_col).alias("pid"), to_double(F.col(vec_col)).alias("v")
+    Each iteration re-reads the input (assign + update share one scan, but
+    iterations don't): recompute wins on local page-cache profiles
+    (round-3/4 finding), so the points are persisted only under
+    remoteStorage, where iters+1 corpus scans dominate."""
+    pts, persisted = persist_for_replay(
+        df.select(F.col(id_col).alias("pid"), to_double(F.col(vec_col)).alias("v"))
     )
-    if persist_points:
-        pts = pts.persist()
     # init from VALID vectors only: the dimension is set by the smallest-id
     # non-null vector, and NULL/other-dimension rows can neither seed nor
     # (downstream) join a cluster — they get NULL assignments instead of
@@ -165,7 +158,7 @@ def kmeans_fit_assign(
     if with_distance:
         cols.append(F.col("dist2"))
     out = assign_clusters(pts, centroids, with_distance=with_distance).select(*cols)
-    if persist_points:
+    if persisted:
         # materialized by the final assignment's consumer; safe to drop
         # the iteration cache now — the returned frame re-derives from it
         # lazily, so unpersist only marks it evictable

@@ -6,11 +6,10 @@ ordering").
 Implemented with a window over conv_id — the natural Spark expression of
 "per-conversation order". Skew note: a hot conversation with 100x the
 turns is still only thousands of rows, far below partition size; the
-window's sort is per-key and spills if needed. The surrounding engine
-repartitions by conv_id (optionally salted) before wide per-conversation
-work; the window itself must see the *whole* conversation, so salt is not
-applied here — hot-key pressure is bounded by max conversation length,
-not by conversation count.
+window's sort is per-key and spills if needed. The engine does not
+repartition beforehand: the window plans its own conv_id exchange, and
+since it must see the *whole* conversation no salt is applied — hot-key
+pressure is bounded by max conversation length, not by conversation count.
 """
 
 from __future__ import annotations

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from avro_conversions_spark.functions.text import fingerprint, shingles
 from avro_conversions_spark.functions.vectors import cosine, simhash_bits
+from avro_conversions_spark.session import persist_for_replay
 
 
 def md5_hash64(c: Column, seed: int) -> Column:
@@ -313,19 +314,17 @@ def ngram_jaccard_pairs(
     shingle_n: int = 3,
     candidates: DataFrame | None = None,
     max_shingle_freq: int | None = None,
-    persist_shingles: bool | None = None,
 ) -> DataFrame:
     """Pairs with shingle-set Jaccard ≥ threshold: (id_a, id_b, jaccard).
 
-    ``persist_shingles``: the shingle frame feeds ~6 sub-plans (sizes,
-    both join sides, the frequency cap, candidate filters); without
-    caching, Spark recomputes the scan+tokenize+shingle lineage for each —
-    a round-4 plan audit counted 22 parquet scans in the LSH-bounded
-    driver query. Locally that RECOMPUTE WINS (measured 4.5 s vs 6.2 s at
-    sf0.1 — page-cache parquet re-decode beats the columnar-cache round
-    trip, same finding as the engine's cache_input). On a cluster reading
-    remote object storage, set True so the corpus is scanned once.
-    Default None = resolve from the session-wide ``remote_storage`` flag.
+    The shingle frame feeds ~6 sub-plans (sizes, both join sides, the
+    frequency cap, candidate filters); without caching, Spark recomputes
+    the scan+tokenize+shingle lineage for each — a round-4 plan audit
+    counted 22 parquet scans in the LSH-bounded driver query. Locally that
+    RECOMPUTE WINS (measured 4.5 s vs 6.2 s at sf0.1 — page-cache parquet
+    re-decode beats the columnar-cache round trip, same finding as the
+    engine's input projection), so the frame is persisted only under
+    remoteStorage, where the corpus should be scanned once.
 
     Without ``candidates`` this self-joins on shingle (fine when shingles
     are selective / table small); at scale pass minhash_lsh_candidates to
@@ -343,10 +342,6 @@ def ngram_jaccard_pairs(
     happens for non-candidates (round-1 verdict: filtering after the
     aggregation bounded nothing).
     """
-    if persist_shingles is None:
-        from avro_conversions_spark.session import remote_storage
-
-        persist_shingles = remote_storage(df.sparkSession)
     cand = None
     base = df
     if candidates is not None:
@@ -365,19 +360,15 @@ def ngram_jaccard_pairs(
         # value-identical and skips the expensive projection for the
         # (at 100 TB, overwhelming) non-candidate majority.
         base = df.join(cand_ids, id_col, "left_semi")
-    sh = doc_shingles(base, text_col, id_col, shingle_n)
-    if persist_shingles:
-        from pyspark.storagelevel import StorageLevel
-
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    sh, _ = persist_for_replay(doc_shingles(base, text_col, id_col, shingle_n))
     if max_shingle_freq is not None:
         # document frequency is CORPUS-wide (computed on the unfiltered
         # corpus' shingles): a stop-shingle's corpus frequency is what
         # makes it a blow-up hazard, and the cap's semantics must not
-        # change when a candidate set narrows the docs entering the join
-        freq = doc_shingles(df, text_col, id_col, shingle_n).groupBy("shingle").agg(
-            F.count(F.lit(1)).alias("_df")
-        )
+        # change when a candidate set narrows the docs entering the join.
+        # Without candidates the staged frame already IS the corpus'.
+        corpus = sh if cand is None else doc_shingles(df, text_col, id_col, shingle_n)
+        freq = corpus.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
         keep = freq.where(F.col("_df") <= max_shingle_freq).select("shingle")
         sh = sh.join(keep, "shingle", "left_semi")
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))

@@ -38,6 +38,7 @@ from avro_conversions_spark.constraints.core import RowConstraint
 from avro_conversions_spark.constraints.referential import ReferentialConstraint
 from avro_conversions_spark.constraints.sequence import SequenceConstraint
 from avro_conversions_spark.constraints.uniqueness import UniqueConstraint
+from avro_conversions_spark.session import persist_for_replay
 
 TS_CANON_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
@@ -57,11 +58,10 @@ def canonical_str(col: Column, dtype: T.DataType) -> Column:
 class ValidationResult:
     verdicts: DataFrame
     violations: DataFrame
-    # handle on the persisted internal violations frame (if caching was
-    # requested) so callers (e.g. the resumable ledger loop) can unpersist
-    # after materializing outputs.
+    # handle on the persisted internal violations frame so callers (e.g.
+    # the resumable ledger loop) can unpersist after materializing outputs.
     cached: DataFrame | None = None
-    # handle on the persisted pruned input projection (cache_input=True)
+    # handle on the pruned input projection when remoteStorage persisted it
     cached_input: DataFrame | None = None
 
     def unpersist(self) -> None:
@@ -183,20 +183,8 @@ class ValidationEngine:
                 need.add(s.ts_col)
         return [c for c in df.columns if c in need]
 
-    def run(
-        self,
-        df: DataFrame,
-        run_id: str = "run-0",
-        cache_violations: bool = True,
-        cache_input: bool | None = None,
-    ) -> ValidationResult:
+    def run(self, df: DataFrame, run_id: str = "run-0") -> ValidationResult:
         self.check_plan(df.schema)
-        if cache_input is None:
-            # default resolves from the session-wide remote_storage flag:
-            # see the cache_input comment below for the measured tradeoff
-            from avro_conversions_spark.session import remote_storage
-
-            cache_input = remote_storage(df.sparkSession)
         part_expr = (
             self.partition_expr if self.partition_expr is not None else F.lit("global")
         ).cast("string")
@@ -204,33 +192,26 @@ class ValidationEngine:
         # one extra small column) instead of joining violations back to a
         # full-table dropDuplicates — at 100 TB that join was an extra
         # whole-table exchange just to map violation -> partition.
-        pdf = df.withColumn(_PART, part_expr)
-        cached_input = None
-        if cache_input:
-            # the constraint families (row pass, uniqueness, referential,
-            # sequence, rows_checked) are independent consumers — each one
-            # re-decodes the source (5 scans of the pruned columns; measured
-            # plan). cache_input persists the PRUNED projection (constrained
-            # + key columns only; a transcript table's text/payload never
-            # enters) so the source is read ONCE. Measured on a LOCAL 42M-turn
-            # parquet table this LOSES ~2x: vectorized re-decode out of the OS
-            # page cache is cheaper than building + reading a deserialized
-            # columnar cache, so the default is off. Turn it on when the
-            # source is remote object storage (S3/GCS) or a cold Iceberg
-            # snapshot, where each extra scan is real network I/O — there the
-            # one-pass read dominates the cache-build cost.
-            pdf = pdf.select(*self._needed_columns(df), _PART).persist()
-            cached_input = pdf
+        # The constraint families (row pass, uniqueness, referential,
+        # sequence, rows_checked) are independent consumers, each re-decoding
+        # the source (5 scans of the pruned columns; measured plan). Under
+        # remoteStorage the PRUNED projection (constrained + key columns only;
+        # a transcript table's text/payload never enters) is persisted so the
+        # source is read ONCE. Measured on a LOCAL 42M-turn parquet table that
+        # LOSES ~2x: vectorized re-decode out of the OS page cache is cheaper
+        # than building + reading a deserialized columnar cache. Locally the
+        # projection only restates the column pruning the optimizer does.
+        pdf, input_persisted = persist_for_replay(
+            df.withColumn(_PART, part_expr).select(*self._needed_columns(df), _PART)
+        )
 
-        vint = self.violations_df(pdf, _part_col=_PART)
-        if cache_violations:
-            # persist BEFORE the canonical orderBy: a global sort's range
-            # partitioner SAMPLES its child, so an uncached child plan (every
-            # constraint pass over the full table) would execute twice —
-            # once for sampling, once for the sort. Cached, both read the
-            # small violation set. Also lets the verdict aggregation below
-            # reuse it (at 100 TB: one full scan, not three).
-            vint = vint.persist()
+        # persist BEFORE the canonical orderBy: a global sort's range
+        # partitioner SAMPLES its child, so an uncached child plan (every
+        # constraint pass over the full table) would execute twice — once
+        # for sampling, once for the sort. Cached, both read the small
+        # violation set. Also lets the verdict aggregation below reuse it
+        # (at 100 TB: one full scan, not three).
+        vint = self.violations_df(pdf, _part_col=_PART).persist()
         violations = vint.select(
             F.lit(run_id).alias("run_id"),
             *self.key_cols,
@@ -288,8 +269,8 @@ class ValidationEngine:
         return ValidationResult(
             verdicts=verdicts,
             violations=violations,
-            cached=vint if cache_violations else None,
-            cached_input=cached_input,
+            cached=vint,
+            cached_input=pdf if input_persisted else None,
         )
 
     # ------------------------------------------------------------- repairs

@@ -140,7 +140,9 @@ def train_lr(
     lr: float = 1.0,
 ) -> list[float]:
     """Full-batch GD on logistic loss; returns the learned weight list
-    (length n_buckets+1, last = bias). label_col must be 0/1.
+    (length n_buckets+1, last = bias). label_col must be 0/1 and id_col
+    unique and non-null (else ValueError): a repeated id would merge its
+    rows' features into one margin.
 
     Round-6 shape: the (feature ⋈ label) frame is staged ONCE via
     localCheckpoint and every GD step reads the materialized narrow rows.
@@ -158,7 +160,11 @@ def train_lr(
 
     feats = _features(train, id_col, text_col, n_buckets)
     labels = train.select(F.col(id_col), F.col(label_col).cast("double").alias("y"))
-    n = train.count()
+    n, n_ids = train.agg(F.count(F.lit(1)), F.count_distinct(id_col)).first()
+    if n_ids != n:
+        raise ValueError(
+            f"train_lr needs unique non-null {id_col}: {n} rows, {n_ids} distinct ids"
+        )
     # NOTE: no pre-partitioning before the checkpoint — under AQE the
     # LogicalRDD surfaces UnknownPartitioning, so a repartition here would
     # be paid once and then thrown away; each step's window inserts its

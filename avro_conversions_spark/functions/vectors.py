@@ -77,11 +77,14 @@ def const_double_array(values) -> Column:
     parses on the JVM (~5 ms). ``repr`` emits the shortest decimal that
     round-trips the double and Java's parser is correctly rounded, so the
     literal values are bit-identical to the F.lit form (pinned by test).
-    Non-finite values (inf/nan) have no SQL literal — fall back to F.lit."""
+    Non-finite values (inf/nan) have no SQL literal — fall back to F.lit.
+    An empty list still types as array<double>."""
     import math
 
     vals = [float(v) for v in values]
-    if vals and all(math.isfinite(v) for v in vals):
+    if not vals:
+        return F.array().cast("array<double>")
+    if all(math.isfinite(v) for v in vals):
         return F.expr("array(" + ",".join(repr(v) + "D" for v in vals) + ")")
     return F.lit(vals)
 

@@ -19,7 +19,6 @@ Conventions:
 
 from __future__ import annotations
 
-import os
 import shutil
 from collections.abc import Callable
 
@@ -528,7 +527,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CONTAINERS_ORACLE_PATH = f"/tmp/acs_oracle_containers_{os.getpid()}"
+CONTAINERS_ORACLE_PATH = "/tmp/acs_oracle_containers"
 
 
 def q_multimodal_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1068,10 +1067,7 @@ def q_stream_windowed_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return result
 
 
-# per-process staging paths: the oracle SQL embeds the path at import
-# time, and the Spark query writes it in the same process, so a pid
-# suffix keeps concurrent driver runs from clobbering each other
-STATEFUL_ORACLE_PATH = f"/tmp/acs_oracle_stateful_{os.getpid()}"
+STATEFUL_ORACLE_PATH = "/tmp/acs_oracle_stateful"
 
 
 def q_stateful_stream_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1304,8 +1300,8 @@ def q_drift_gate_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -------------------------------------------------------------- transcripts
 
 
-TRANSCRIPTS_ORACLE_PATH = f"/tmp/acs_oracle_transcripts_{os.getpid()}"
-CONV_PROFILE_ORACLE_PATH = f"/tmp/acs_oracle_convprofile_{os.getpid()}"
+TRANSCRIPTS_ORACLE_PATH = "/tmp/acs_oracle_transcripts"
+CONV_PROFILE_ORACLE_PATH = "/tmp/acs_oracle_convprofile"
 
 
 def q_validate_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -10,23 +10,31 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
-# One switch for the 100 TB storage profile (VERDICT r5 next #8): when the
-# session declares its inputs remote (S3/GCS/cold Iceberg), every
-# recompute-vs-persist knob (kmeans persist_points, jaccard
-# persist_shingles, classifier persist_features, engine cache_input) flips
-# to persisting, because each extra lineage replay is a real network scan.
-# Local default stays recompute: page-cache parquet re-decode beats the
-# columnar-cache round trip on every profile measured in rounds 3-5.
+# One switch for the 100 TB storage profile: when the session declares its
+# inputs remote (S3/GCS/cold Iceberg), every frame that several passes replay
+# is persisted through persist_for_replay, because each extra lineage replay
+# is a real network scan. It flips three stages: the engine's pruned input
+# projection, the k-means points and the Jaccard shingle frame. Local default
+# stays recompute: page-cache parquet re-decode beats the columnar-cache round
+# trip on every profile measured in rounds 3-5.
 REMOTE_STORAGE_CONF = "spark.avro_conversions.remoteStorage"
 
 
 def remote_storage(spark: SparkSession) -> bool:
-    """True when the session is configured for remote object storage —
-    the single flag persist-default knobs resolve against when unset."""
+    """True when the session is configured for remote object storage."""
     return str(spark.conf.get(REMOTE_STORAGE_CONF, "false")).lower() == "true"
+
+
+def persist_for_replay(df: DataFrame) -> tuple[DataFrame, bool]:
+    """Persist ``df``, a frame that several passes replay, when the session
+    is under remoteStorage; otherwise return it unchanged. The flag tells
+    the caller whether it now owns a persisted frame to unpersist."""
+    if not remote_storage(df.sparkSession):
+        return df, False
+    return df.persist(), True
 
 
 def get_spark(

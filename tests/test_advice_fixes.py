@@ -83,7 +83,7 @@ def test_partitioned_verdicts_count_nonkey_unique_violations(spark):
         key_cols=("event_id",),
         partition_expr=F.col("day"),
     )
-    res = eng.run(df, "t", cache_violations=False)
+    res = eng.run(df, "t")
     verdicts = {
         (r.partition_key, r.constraint): (r.status, r.violation_count)
         for r in res.verdicts.collect()
@@ -92,6 +92,7 @@ def test_partitioned_verdicts_count_nonkey_unique_violations(spark):
     assert verdicts[("2024-01-01", "unique(user_id)")] == ("fail", 1)
     assert verdicts[("2024-01-02", "unique(user_id)")] == ("pass", 0)
     assert res.violations.count() == 1
+    res.unpersist()
 
 
 def test_null_partition_key_lands_in_unattributed_bucket(spark):
@@ -104,8 +105,9 @@ def test_null_partition_key_lands_in_unattributed_bucket(spark):
         key_cols=("event_id",),
         partition_expr=F.col("day"),
     )
-    res = eng.run(df, "t", cache_violations=False)
+    res = eng.run(df, "t")
     rows = {(r.partition_key, r.status, r.violation_count) for r in res.verdicts.collect()}
     # e1's null user_id happened in partition d1 -> attributed there; no
     # violation is ever silently dropped
     assert ("d1", "fail", 1) in rows
+    res.unpersist()

@@ -8,6 +8,7 @@ from __future__ import annotations
 import hashlib
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from avro_conversions_spark.functions import classifier as CLF
@@ -30,6 +31,15 @@ def test_separable_corpus_learned(spark):
     assert min(scores[i][0] for i in range(10)) > max(
         scores[100 + i][0] for i in range(10)
     )
+
+
+def test_repeated_train_ids_raise(spark):
+    # a repeated id would merge both rows' features into one margin
+    df = spark.createDataFrame(
+        [(1, "foo", 1), (1, "bar", 0), (2, "baz", 0)], "doc_id long, text string, y int"
+    )
+    with pytest.raises(ValueError, match="unique"):
+        CLF.train_lr(df, "y", n_buckets=8, iters=1)
 
 
 def test_first_iteration_gradient_exact(spark):

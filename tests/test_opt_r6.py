@@ -8,6 +8,7 @@ cannot silently reintroduce the shuffle (or change query results).
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 SF001 = "/root/testdata/sf0.001"
 
@@ -272,3 +273,30 @@ def test_const_double_literals_bit_identical_to_lit(spark):
     # non-finite falls back to F.lit (no SQL literal for nan/inf)
     nf = df.select(const_double_array([1.0, float("nan")]).alias("a")).collect()[0]["a"]
     assert nf[0] == 1.0 and math.isnan(nf[1])
+    # an empty list still types as array<double>, not an untyped array()
+    empty = df.select(const_double_array([]).alias("a"))
+    assert empty.schema["a"].dataType == T.ArrayType(T.DoubleType())
+    assert empty.collect()[0]["a"] == []
+
+
+def test_oracle_sql_identical_across_processes():
+    """oracle_sql() is a pure function of the tree: the staging paths the
+    oracle SQL embeds carry no per-process suffix, so two interpreters
+    render byte-identical oracle texts."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "import json, sys; "
+        "from avro_conversions_spark.operators.queries import ORACLES; "
+        "sys.stdout.write(json.dumps(ORACLES, sort_keys=True))"
+    )
+    root = Path(__file__).resolve().parents[1]
+    dumps = [
+        subprocess.run(
+            [sys.executable, "-c", code], cwd=root, capture_output=True, check=True
+        ).stdout
+        for _ in range(2)
+    ]
+    assert dumps[0] and dumps[0] == dumps[1]
