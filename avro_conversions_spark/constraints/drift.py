@@ -1,72 +1,35 @@
-"""Distribution-drift checks: quantile-sketch snapshots + KS statistic.
+"""Distribution-drift checks: t-digest baseline snapshots + KS statistic.
 
-Design (SURVEY.md §2.8 / build plan step 6):
-- a *baseline snapshot* stores per-column quantile sketches (GK summaries
-  via percentile_approx at fine granularity — single-pass, mergeable,
-  the scale path) and HLL sketches for categorical cardinality;
-- a later run computes the same sketches over current data and the KS
-  statistic D = max |ECDF_base(q) − ECDF_cur(q)| is evaluated DRIVER-SIDE
-  over the merged quantile grid — the sketches are a few KB per column, so
-  the 100 TB table is reduced to two tiny arrays before any comparison;
+- a *baseline snapshot* is one row per column, ``(column string, means
+  array<double>, weights array<double>)``: the merged t-digest centroids
+  from ``functions.tdigest.tdigest_columns`` (one zero-exchange pass,
+  O(delta) centroids per column);
+- a later run digests the current data the same way, and the KS statistic
+  D = max |CDF_base(v) − CDF_cur(v)| over the union centroid grid is
+  evaluated DRIVER-SIDE — the 100 TB table is reduced to two tiny digests
+  before any comparison;
 - verdict: drift if D > threshold.
-
-The ECDFs are reconstructed from each side's own quantile grid by
-interpolation-free step evaluation: ECDF(v) for sketch S with probes
-p_1..p_k and values q_1..q_k is the largest p_i with q_i <= v — accurate
-to the probe spacing (1/resolution), which bounds the KS error by the same
-amount (Glivenko-Cantelli on the grid).
 """
 
 from __future__ import annotations
 
-import bisect
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from avro_conversions_spark.functions.tdigest import ks_from_digests, tdigest_columns
+
+SNAPSHOT_COLUMNS = ("column", "means", "weights")
 
 
-def quantile_snapshot(
-    df: DataFrame,
-    columns: list[str],
-    resolution: int = 200,
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """One row per column: (column, probs array<double>, quantiles
-    array<double>). Single aggregation pass for ALL columns."""
-    probs = [i / resolution for i in range(resolution + 1)]
-    from avro_conversions_spark.functions.vectors import const_double_array
-
-    prob_arr = const_double_array(probs)
-    aggs = [
-        F.percentile_approx(F.col(c).cast("double"), prob_arr, accuracy).alias(f"{c}__q")
-        for c in columns
-    ]
-    wide = df.agg(*aggs)
-    per_col = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column"),
-                prob_arr.alias("probs"),
-                F.col(f"{c}__q").cast("array<double>").alias("quantiles"),
-            )
-            for c in columns
-        ]
-    )
-    return wide.select(F.explode(per_col).alias("s")).select("s.*")
-
-
-def tdigest_snapshot(
-    df: DataFrame, columns: list[str], delta: int = 100, n_buckets: int = 64
-) -> DataFrame:
+def tdigest_snapshot(df: DataFrame, columns: list[str], delta: int = 100) -> DataFrame:
     """One row per column: (column, means array<double>, weights
     array<double>) — merged t-digest centroids, the north-star baseline
     snapshot ("KS-statistic on t-digest quantile sketches"). Unlike GK,
     t-digest keeps relative accuracy at the tails (q -> 0/1), which is
     where latency-like drift shows first."""
-    from avro_conversions_spark.functions.tdigest import tdigest_columns
-
-    digests = tdigest_columns(df, columns, delta=delta, n_buckets=n_buckets)
+    digests = tdigest_columns(df, columns, delta=delta)
     rows = [(c, m.tolist(), w.tolist()) for c, (m, w) in digests.items()]
     return df.sparkSession.createDataFrame(
         rows, "column string, means array<double>, weights array<double>"
@@ -81,91 +44,46 @@ def load_snapshot(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def ks_statistic(base_q: list[float], base_p: list[float], cur_q: list[float], cur_p: list[float]) -> float:
-    """Driver-side KS over two quantile grids (tiny arrays)."""
-
-    def ecdf(qs: list[float], ps: list[float], v: float) -> float:
-        i = bisect.bisect_right(qs, v)
-        return ps[i - 1] if i > 0 else 0.0
-
-    grid = sorted(set(base_q) | set(cur_q))
-    d = 0.0
-    for v in grid:
-        d = max(d, abs(ecdf(base_q, base_p, v) - ecdf(cur_q, cur_p, v)))
-    return d
-
-
 @dataclass
 class DriftConstraint:
-    """Compare current data against a persisted baseline snapshot.
-
-    ``method='tdigest'`` (default, the north-star path): the baseline holds
-    merged t-digest centroids and KS evaluates over the two digests' CDFs
-    driver-side. ``method='gk'`` is the cheap built-in path via
-    percentile_approx quantile grids."""
+    """Compare current data against a persisted t-digest baseline
+    snapshot; KS evaluates over the two digests' CDFs driver-side."""
 
     columns: list[str]
     baseline_path: str
     threshold: float = 0.1
-    resolution: int = 200
-    name: str = "drift"
-    method: str = "tdigest"  # 'tdigest' | 'gk'
     delta: int = 100
-    n_buckets: int = 64
 
     def snapshot(self, df: DataFrame) -> DataFrame:
-        if self.method == "tdigest":
-            return tdigest_snapshot(df, self.columns, self.delta, self.n_buckets)
-        return quantile_snapshot(df, self.columns, self.resolution)
+        return tdigest_snapshot(df, self.columns, self.delta)
 
     def check(self, df: DataFrame) -> list[dict]:
         """Returns one verdict dict per column:
-        {column, ks, threshold, status}. Sketch reduction is distributed;
-        KS itself runs on the driver over O(delta|resolution) values per
-        column. The snapshot kind is detected from its schema, so a GK
-        baseline keeps working after switching methods."""
-        spark = df.sparkSession
-        base_df = load_snapshot(spark, self.baseline_path)
-        base_is_digest = "means" in base_df.columns
+        {column, ks, threshold, status}. The digest build is distributed;
+        KS itself runs on the driver over O(delta) centroids per column.
+        Raises ValueError if the baseline is not a t-digest snapshot."""
+        base_df = load_snapshot(df.sparkSession, self.baseline_path)
+        missing = [c for c in SNAPSHOT_COLUMNS if c not in base_df.columns]
+        if missing:
+            raise ValueError(
+                f"drift baseline {self.baseline_path} is not a t-digest snapshot: "
+                f"expected columns {list(SNAPSHOT_COLUMNS)}, missing {missing}"
+            )
         base = {r["column"]: r for r in base_df.collect()}
-        cur_df = (
-            tdigest_snapshot(df, self.columns, self.delta, self.n_buckets)
-            if base_is_digest
-            else quantile_snapshot(df, self.columns, self.resolution)
-        )
-        cur = {r["column"]: r for r in cur_df.collect()}
+        cur = {r["column"]: r for r in self.snapshot(df).collect()}
         out = []
         for c in self.columns:
-            b, k = base.get(c), cur.get(c)
-            if b is None or k is None:
+            b = base.get(c)
+            if b is None:
                 out.append(
                     {"column": c, "ks": None, "threshold": self.threshold, "status": "no_baseline"}
                 )
                 continue
-            if base_is_digest:
-                import numpy as np
-
-                from avro_conversions_spark.functions.tdigest import ks_from_digests
-
-                d = ks_from_digests(
-                    np.asarray(b["means"]), np.asarray(b["weights"]),
-                    np.asarray(k["means"]), np.asarray(k["weights"]),
-                )
-            else:
-                if b["quantiles"] is None or k["quantiles"] is None:
-                    out.append(
-                        {
-                            "column": c,
-                            "ks": None,
-                            "threshold": self.threshold,
-                            "status": "no_baseline",
-                        }
-                    )
-                    continue
-                d = ks_statistic(
-                    [q for q in b["quantiles"]], list(b["probs"]),
-                    [q for q in k["quantiles"]], list(k["probs"]),
-                )
+            k = cur[c]
+            d = ks_from_digests(
+                np.asarray(b["means"]), np.asarray(b["weights"]),
+                np.asarray(k["means"]), np.asarray(k["weights"]),
+            )
             out.append(
                 {
                     "column": c,
@@ -175,22 +93,3 @@ class DriftConstraint:
                 }
             )
         return out
-
-    def verdict_rows(self, df: DataFrame, run_id: str = "run-0") -> DataFrame:
-        rows = [
-            (
-                run_id,
-                "global",
-                f"{self.name}({r['column']})",
-                r["status"],
-                0 if r["status"] in ("pass", "no_baseline") else 1,
-                0,  # rows_checked is filled by engine callers, not here
-                {"ks": str(r["ks"]), "threshold": str(r["threshold"])},
-            )
-            for r in self.check(df)
-        ]
-        return df.sparkSession.createDataFrame(
-            rows,
-            "run_id string, partition_key string, constraint string, status string, "
-            "violation_count long, rows_checked long, metrics map<string,string>",
-        )

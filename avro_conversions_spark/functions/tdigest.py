@@ -1,15 +1,12 @@
-"""t-digest quantile sketches via Arrow-batched pandas UDFs
-(SURVEY.md §2.8 quantile-sketch row: "t-digest per north star → pandas
-UDAF building t-digest per partition, merged on driver").
+"""t-digest quantile sketches built per Spark task from Arrow batches,
+merged on the driver.
 
 A compact pure-numpy t-digest (merging variant, Dunning & Ertl): centroids
-are (mean, weight) pairs kept under a scale-function size bound. The
-default path builds one digest per column per TASK via ``mapInPandas``
-(Arrow-vectorized, no per-row Python, zero exchange) and merges the
-O(tasks × columns) centroid partials on the driver; the reproducible
-``partition_salt=False`` path buckets rows by value hash and builds one
-digest per bucket via ``applyInPandas`` instead. Digest size is O(delta)
-— a 100 TB column reduces to a handful of centroid partials per task.
+are (mean, weight) pairs kept under the k1 scale-function size bound.
+``tdigest_columns`` folds each task's Arrow batches into one digest per
+column (no per-row Python, no exchange) and merges the O(tasks × columns)
+centroid partials on the driver, so a 100 TB column reduces to a handful
+of O(delta) partials per task before any comparison.
 
 Compared to percentile_approx (GK): t-digest has relative accuracy at the
 tails (q→0/1), which is what drift checks on latency-like columns need.
@@ -113,151 +110,41 @@ def ks_from_digests(
 
 
 def tdigest_columns(
-    df: DataFrame,
-    columns: list[str],
-    delta: int = 100,
-    n_buckets: int = 64,
-    partition_salt: bool = True,
+    df: DataFrame, columns: list[str], delta: int = 100
 ) -> dict[str, tuple[np.ndarray, np.ndarray]]:
-    """Per-column merged t-digests in ONE distributed pass over the
-    constrained columns only; partial digests merge on the driver. A
-    100 TB table reduces to O(columns × delta) centroids per task before
-    any comparison.
+    """Per-column merged t-digests in ONE zero-exchange pass over the
+    given columns: each task folds its Arrow batches into one digest per
+    column (task memory stays O(delta)), and only the centroid
+    partials reach the driver, where they merge.
 
-    Determinism: with ``partition_salt=True`` (default) partials are
-    built per input TASK (zero-exchange ``mapInPandas``), so the merged
-    centroids — and quantile estimates, slightly — depend on physical
-    input partitioning: identical data under different file splits or
-    parallelism yields accuracy-equivalent but not bit-identical digests
-    (the same contract the historical partition-id-salted bucketing had).
-    Callers needing repartition-invariant (reproducible) digests pass
-    ``partition_salt=False``: rows bucket by value hash and the digest is
-    a pure function of the data multiset, at the cost of a full exchange
-    and of constant-heavy columns concentrating into one pandas group
-    (executor-memory risk at scale)."""
-    if partition_salt:
-        # Round 6 (guide §2.3/§4.1): partition-dependent digests don't
-        # need a shuffle AT ALL — ``mapInPandas`` folds each task's rows
-        # into one digest per column and only the O(columns × delta)
-        # centroid partials ever leave the task. The historical path
-        # exploded every row to (column, value) pairs and shuffled the
-        # FULL table into applyInPandas hash-bucket groups; at 100 TB
-        # that exchange was the whole cost of a snapshot. Centroid
-        # detail remains partition-dependent exactly as the salted
-        # contract documents (the salt's purpose — splitting
-        # constant-heavy columns across groups — is moot here: tasks
-        # never group by value). Each batch becomes a digest and folds
-        # into the task accumulator, so task memory stays O(delta), and
-        # iterative batch-merging only re-compresses — the same
-        # operation driver-side merging performs anyway.
-        proj = df.select(*[F.col(c).cast("double").alias(c) for c in columns])
+    Partials follow the input tasks, so centroid detail depends on the
+    physical partitioning: the same data under other splits gives a
+    digest of equal accuracy, not identical centroids. KS between two
+    layouts of one multiset stays near zero (pinned by
+    test_tdigest_layouts_agree_within_ks)."""
+    proj = df.select(*[F.col(c).cast("double").alias(c) for c in columns])
 
-        def per_partition(batches):
-            accs: dict[str, tuple[np.ndarray, np.ndarray]] = {
-                c: (np.array([]), np.array([])) for c in columns
+    def per_partition(batches):
+        accs: dict[str, tuple[np.ndarray, np.ndarray]] = {
+            c: (np.array([]), np.array([])) for c in columns
+        }
+        for pdf in batches:
+            for c in columns:
+                m, w = build_digest(pdf[c].to_numpy(dtype="float64"), delta)
+                if len(m):
+                    accs[c] = merge_digests([accs[c], (m, w)], delta)
+        yield pd.DataFrame(
+            {
+                "column": list(columns),
+                "means": [accs[c][0].tolist() for c in columns],
+                "weights": [accs[c][1].tolist() for c in columns],
             }
-            for pdf in batches:
-                for c in columns:
-                    m, w = build_digest(pdf[c].to_numpy(dtype="float64"), delta)
-                    if len(m):
-                        accs[c] = merge_digests([accs[c], (m, w)], delta)
-            yield pd.DataFrame(
-                {
-                    "column": list(columns),
-                    "means": [accs[c][0].tolist() for c in columns],
-                    "weights": [accs[c][1].tolist() for c in columns],
-                }
-            )
-
-        partials = proj.mapInPandas(
-            per_partition, "column string, means array<double>, weights array<double>"
-        )
-        by_col: dict[str, list[tuple[np.ndarray, np.ndarray]]] = {c: [] for c in columns}
-        for r in partials.collect():
-            by_col[r["column"]].append((np.asarray(r["means"]), np.asarray(r["weights"])))
-        return {c: merge_digests(parts, delta) for c, parts in by_col.items()}
-
-    pairs = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(c).alias("column"), F.col(c).cast("double").alias("v"))
-                    for c in columns
-                ]
-            )
-        ).alias("p")
-    ).select("p.*")
-    # partition_salt=False: the REPRODUCIBLE path — bucket by value hash
-    # only, so the digest is a pure function of the data multiset
-    # regardless of physical partitioning (pinned by
-    # test_partition_salt_false_repartition_invariant). Costs the full
-    # (column, value) exchange the salted path above avoids; callers
-    # accept that a constant-heavy column concentrates into one pandas
-    # group (executor-memory risk at scale).
-    buckets = pairs.withColumn("_b", F.pmod(F.xxhash64("v"), F.lit(n_buckets)))
-
-    def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        m, w = build_digest(pdf["v"].to_numpy(dtype="float64"), delta)
-        return pd.DataFrame(
-            {"column": [pdf["column"].iloc[0]], "means": [m.tolist()], "weights": [w.tolist()]}
         )
 
-    partials = buckets.groupBy("column", "_b").applyInPandas(
-        per_bucket, "column string, means array<double>, weights array<double>"
+    partials = proj.mapInPandas(
+        per_partition, "column string, means array<double>, weights array<double>"
     )
     by_col: dict[str, list[tuple[np.ndarray, np.ndarray]]] = {c: [] for c in columns}
     for r in partials.collect():
         by_col[r["column"]].append((np.asarray(r["means"]), np.asarray(r["weights"])))
     return {c: merge_digests(parts, delta) for c, parts in by_col.items()}
-
-
-def tdigest_quantiles(
-    df: DataFrame,
-    column: str,
-    probs: list[float] | None = None,
-    delta: int = 100,
-    n_buckets: int = 64,
-    partition_salt: bool = True,
-) -> list[tuple[float, float]]:
-    """Distributed t-digest: bucket rows by hash, applyInPandas builds one
-    digest per bucket (vectorized), driver merges ≤ n_buckets digests and
-    reads quantiles. Returns [(prob, value)].
-
-    Same determinism caveat as ``tdigest_columns``: the default
-    partition-id salt makes estimates accuracy-equivalent but not
-    bit-identical across different physical partitionings; pass
-    ``partition_salt=False`` for reproducible digests (at the cost of
-    constant-heavy columns concentrating into one group)."""
-    probs = probs or [0.25, 0.5, 0.75]
-
-    if partition_salt:
-        # zero-exchange per-task partials — see tdigest_columns (round 6)
-        m, w = tdigest_columns(
-            df.select(F.col(column).cast("double").alias(column)),
-            [column],
-            delta=delta,
-            n_buckets=n_buckets,
-            partition_salt=True,
-        )[column]
-        return [(p, digest_quantile(m, w, p)) for p in probs]
-
-    def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        m, w = build_digest(pdf[column].to_numpy(dtype="float64"), delta)
-        return pd.DataFrame(
-            {"means": [m.tolist()], "weights": [w.tolist()]}
-        )
-
-    buckets = df.select(
-        F.col(column).cast("double").alias(column),
-        # value-hash bucketing (no salt): reproducible across physical
-        # partitionings — see tdigest_columns' partition_salt=False path
-        F.pmod(F.xxhash64(column), F.lit(n_buckets)).alias("_b"),
-    )
-    partials = buckets.groupBy("_b").applyInPandas(
-        per_bucket, "means array<double>, weights array<double>"
-    )
-    rows = partials.collect()
-    m, w = merge_digests(
-        [(np.asarray(r["means"]), np.asarray(r["weights"])) for r in rows], delta
-    )
-    return [(p, digest_quantile(m, w, p)) for p in probs]

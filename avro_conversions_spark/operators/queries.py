@@ -1221,7 +1221,7 @@ def q_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         path = tmp + "/baseline"
         save_snapshot(tdigest_snapshot(half, ["value"]), path)
-        dc = DriftConstraint(["value"], path, threshold=0.1, method="tdigest")
+        dc = DriftConstraint(["value"], path, threshold=0.1)
         rows = dc.check(ev.select("value"))
         return spark.createDataFrame(
             [(r["column"], r["ks"], r["status"]) for r in rows],
@@ -1286,7 +1286,7 @@ def q_drift_gate_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         path = tmp + "/baseline"
         save_snapshot(tdigest_snapshot(base.select("value"), ["value"]), path)
-        dc = DriftConstraint(["value"], path, threshold=0.1, method="tdigest")
+        dc = DriftConstraint(["value"], path, threshold=0.1)
         engine_ks = dc.check(ev.select("value"))[0]["ks"]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -7,7 +7,7 @@ is scanned once. Cardinality comes in two flavors:
 - exact ``count_distinct`` (used by the DuckDB-verified oracle queries);
 - mergeable HyperLogLog sketches ``hll_sketch_agg`` / ``hll_union_agg``
   (Spark ≥3.5) — the 100 TB path: per-partition sketches merge without
-  re-scanning, and persist as the drift baseline.
+  re-scanning.
 """
 
 from __future__ import annotations
@@ -166,8 +166,8 @@ def exact_quantiles(
 def approx_quantiles(
     df: DataFrame, column: str, probs: list[float] | None = None, accuracy: int = 10000
 ) -> DataFrame:
-    """GK-sketch quantiles (percentile_approx) — single-pass, mergeable,
-    the scale path for drift baselines."""
+    """GK-sketch quantiles (percentile_approx) — single-pass, mergeable.
+    Drift baselines use t-digest instead (constraints.drift)."""
     probs = probs or [0.25, 0.5, 0.75]
     qs = F.percentile_approx(F.col(column), F.lit([float(p) for p in probs]), accuracy)
     row = df.agg(qs.alias("qs"))

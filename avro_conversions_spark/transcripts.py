@@ -82,8 +82,8 @@ def transcripts(
         .otherwise(F.lit("assistant"))
     )
     # deterministic lorem: 5-12 words picked by hash, occasional unicode tail
-    # single array literals (one py4j call + one Literal node each; a
-    # per-element CreateArray costs hundreds of driver round trips)
+    # word lists as array columns: F.lit(list) expands to array(lit(x), ...),
+    # one py4j call and one Literal node per element
     words = F.lit(list(_WORDS))
     uni = F.lit(list(_UNICODE_SAMPLES))
     n_words = (F.pmod(h, 8) + 5).cast("int")

@@ -2,7 +2,7 @@
 ADVICE r2 finding gets a pinned behavior here.
 
 - decimal exactness judged in decimal space, not through double
-- t-digest bucket salting (constant-heavy columns must not concentrate)
+- t-digest of a constant column split over tasks is exact
 - to_spark_type recursion guard
 - XSD simpleContent inherited attributes
 - corpus-relative shingle-frequency cap
@@ -75,26 +75,16 @@ def test_decimal_scientific_exact_still_passes(spark):
 # ---------------------------------------------------------------- t-digest
 
 
-def test_tdigest_bucket_salt_spreads_constant_values(spark):
-    """A constant column must spread across >1 applyInPandas group — the
-    partition-id salt is what prevents a single-executor OOM at scale."""
-    df = spark.range(0, 10_000, 1, 4).select(F.lit(1.0).alias("v"))
-    n_buckets = (
-        df.select(
-            F.pmod(F.xxhash64("v", F.spark_partition_id()), F.lit(64)).alias("_b")
-        )
-        .distinct()
-        .count()
-    )
-    assert n_buckets > 1  # pre-fix: exactly 1 (all rows share the value hash)
-
-
 def test_tdigest_constant_column_quantiles_exact(spark):
-    from avro_conversions_spark.functions.tdigest import tdigest_quantiles
+    """A constant column spread over 4 input partitions merges into one
+    exact digest: nothing dropped or double-counted across task partials."""
+    from avro_conversions_spark.functions.tdigest import digest_quantile, tdigest_columns
 
     df = spark.range(0, 5_000, 1, 4).select(F.lit(7.5).alias("v"))
-    qs = dict(tdigest_quantiles(df, "v", probs=[0.1, 0.5, 0.9]))
-    assert qs[0.1] == qs[0.5] == qs[0.9] == 7.5
+    m, w = tdigest_columns(df, ["v"])["v"]
+    assert w.sum() == 5000
+    assert (m == 7.5).all()
+    assert [digest_quantile(m, w, q) for q in (0.1, 0.5, 0.9)] == [7.5, 7.5, 7.5]
 
 
 # ---------------------------------------------------------------- recursion

@@ -6,7 +6,6 @@ ADVICE r3 finding gets a pinned behavior here.
 - date/timestamp converters without regex guards keep full strictness
 - kgram_hashes length cap with a visible ``truncated`` flag
 - _raw_subtree escapes regex metacharacters in element names
-- t-digest partition_salt=False yields repartition-invariant digests
 - q_stream_drift_events / q_drift_events leak no temp dirs
 """
 
@@ -210,20 +209,6 @@ def test_raw_subtree_tag_with_regex_metachars(spark):
     row = parse_xml_with_xsd(df, "xml", _DOTTED_XSD, "envelope").collect()[0]
     raw = row["pay.load"]
     assert "RIGHT" in raw and "WRONG" not in raw
-
-
-# ---------------------------------------------------------------- t-digest
-
-
-def test_tdigest_no_salt_is_repartition_invariant(spark):
-    """ADVICE r3: partition_salt=False must yield bit-identical digests
-    under different physical partitionings of the same data."""
-    from avro_conversions_spark.functions.tdigest import tdigest_quantiles
-
-    base = spark.range(0, 5000).select((F.col("id") % 97).cast("double").alias("v"))
-    q2 = tdigest_quantiles(base.repartition(2), "v", partition_salt=False)
-    q8 = tdigest_quantiles(base.repartition(8), "v", partition_salt=False)
-    assert q2 == q8
 
 
 # ------------------------------------------------------------- temp dirs

@@ -1,4 +1,4 @@
-"""Drift (quantile snapshot + KS) and resumable-ledger semantics."""
+"""Drift (t-digest snapshot + KS) and resumable-ledger semantics."""
 
 from __future__ import annotations
 
@@ -7,24 +7,10 @@ from pyspark.sql import functions as F
 
 from avro_conversions_spark.constraints.drift import (
     DriftConstraint,
-    ks_statistic,
-    quantile_snapshot,
     save_snapshot,
+    tdigest_snapshot,
 )
 from avro_conversions_spark.ledger import ParquetLedger, ResumableValidation
-
-
-def test_ks_statistic_identical_is_zero():
-    q = [float(i) for i in range(11)]
-    p = [i / 10 for i in range(11)]
-    assert ks_statistic(q, p, q, p) == 0.0
-
-
-def test_ks_statistic_shifted():
-    p = [i / 10 for i in range(11)]
-    a = [float(i) for i in range(11)]
-    b = [float(i) + 100 for i in range(11)]  # disjoint → D = 1.0
-    assert ks_statistic(a, p, b, p) == 1.0
 
 
 def test_drift_detects_shift(spark, tmp_path):
@@ -32,7 +18,7 @@ def test_drift_detects_shift(spark, tmp_path):
     cur_same = spark.range(10_000).select((F.col("id") % 100).cast("double").alias("v"))
     cur_shift = spark.range(10_000).select(((F.col("id") % 100) + 50).cast("double").alias("v"))
     path = str(tmp_path / "baseline")
-    save_snapshot(quantile_snapshot(base, ["v"]), path)
+    save_snapshot(tdigest_snapshot(base, ["v"]), path)
     d = DriftConstraint(["v"], path, threshold=0.1)
     assert d.check(cur_same)[0]["status"] == "pass"
     res = d.check(cur_shift)[0]
@@ -159,16 +145,19 @@ def test_tdigest_drift_baseline_and_ks(spark, tmp_path):
     m, w = np.asarray(row["means"]), np.asarray(row["weights"])
     for q, expect in [(0.25, 249.75), (0.5, 499.5), (0.75, 749.25)]:
         assert abs(digest_quantile(m, w, q) - expect) < 15, q
-    d = DriftConstraint(["v"], path, threshold=0.05, method="tdigest")
+    d = DriftConstraint(["v"], path, threshold=0.05)
     same = spark.range(20_000).select((F.col("id") % 1000).cast("double").alias("v"))
     shifted = spark.range(20_000).select(((F.col("id") % 1000) + 500).cast("double").alias("v"))
     assert d.check(same)[0]["status"] == "pass"
     res = d.check(shifted)[0]
     assert res["status"] == "fail" and res["ks"] > 0.3
-    # GK baselines keep working after the method switch (schema-detected)
-    from avro_conversions_spark.constraints.drift import quantile_snapshot
-
-    gk_path = str(tmp_path / "gk_base")
-    save_snapshot(quantile_snapshot(base, ["v"]), gk_path)
-    d_gk = DriftConstraint(["v"], gk_path, threshold=0.05, method="tdigest")
-    assert d_gk.check(same)[0]["status"] == "pass"
+    # a baseline that is not a digest snapshot (here a GK quantile grid)
+    # fails loudly, naming its path
+    bad_path = str(tmp_path / "not_a_digest")
+    spark.createDataFrame(
+        [("v", [0.0, 0.5, 1.0], [0.0, 499.5, 999.0])],
+        "column string, probs array<double>, quantiles array<double>",
+    ).write.parquet(bad_path)
+    d_bad = DriftConstraint(["v"], bad_path, threshold=0.05)
+    with pytest.raises(ValueError, match="not_a_digest"):
+        d_bad.check(same)

@@ -10,8 +10,9 @@ from avro_conversions_spark import partitioning as P
 from avro_conversions_spark.functions.tdigest import (
     build_digest,
     digest_quantile,
+    ks_from_digests,
     merge_digests,
-    tdigest_quantiles,
+    tdigest_columns,
 )
 from avro_conversions_spark.transcripts import transcripts
 
@@ -81,9 +82,32 @@ def test_tdigest_merge_matches_single():
 
 def test_tdigest_distributed(spark):
     df = spark.range(100_000).select((F.col("id") % 1000).cast("double").alias("v"))
-    got = dict(tdigest_quantiles(df, "v", [0.5, 0.9], n_buckets=8))
-    assert abs(got[0.5] - 499.5) < 15
-    assert abs(got[0.9] - 899.1) < 15
+    m, w = tdigest_columns(df, ["v"])["v"]
+    assert abs(digest_quantile(m, w, 0.5) - 499.5) < 15
+    assert abs(digest_quantile(m, w, 0.9) - 899.1) < 15
+
+
+@pytest.mark.parametrize(
+    "n,values",
+    [
+        (5_000, "CAST(id % 97 AS DOUBLE)"),
+        (200_000, "pmod(xxhash64(id), 1000000) / 1000.0D"),
+    ],
+    ids=["mod97", "uniform"],
+)
+def test_tdigest_layouts_agree_within_ks(spark, tmp_path, n, values):
+    """Per-task partials make centroids layout-dependent; the contract
+    that remains is that two layouts of one multiset agree as
+    distributions, so a baseline from one layout passes on the other."""
+    from avro_conversions_spark.constraints.drift import DriftConstraint, save_snapshot
+
+    base = spark.range(n).selectExpr(f"{values} AS v")
+    two, eight = base.repartition(2), base.repartition(8)
+    d2, d8 = tdigest_columns(two, ["v"])["v"], tdigest_columns(eight, ["v"])["v"]
+    assert ks_from_digests(*d2, *d8) <= 0.01
+    c = DriftConstraint(["v"], str(tmp_path / "base2"), threshold=0.01)
+    save_snapshot(c.snapshot(two), c.baseline_path)
+    assert c.check(eight)[0]["status"] == "pass"
 
 
 def test_asof_join_semantics(spark):
