@@ -2,15 +2,21 @@
 
 Each constraint is the direct analogue of a reference ResolveRule
 (opwvhk/avro/io/AsAvroParserBase.java:515-550): a plan-time compatibility
-check plus a runtime Column predicate (true → violation) plus an
-"observed" projector used to build the violation row. All predicates are
-pure ``pyspark.sql.Column`` expressions — they fuse into one whole-stage
-codegen pass over the table, so N constraints cost one scan, not N.
+check plus a runtime Column predicate (true → violation). All predicates
+are pure ``pyspark.sql.Column`` expressions — they fuse into one
+whole-stage codegen pass over the table, so N constraints cost one scan,
+not N.
 
 Violations are *rows with reason codes*; the engine never throws per row
 (the reference throws IOException per document,
 opwvhk/avro/json/JsonAsAvroParser.java:304-315 — that does not survive
-10^12 rows).
+10^12 rows). The violation-row format is built here once and shared by
+the batch engine, the streaming pass and the sequence constraint:
+``(constraint, column, reason, observed)`` structs, non-null ones kept,
+exploded one row each. ``observed`` follows a frozen formatting spec
+(``canonical_str``: timestamps ISO-8601 with 6-digit micros + offset,
+everything else a plain string cast) so golden fixtures byte-match
+(BASELINE.json:15).
 """
 
 from __future__ import annotations
@@ -18,7 +24,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable, Sequence
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -55,8 +61,60 @@ class RowConstraint:
     def violation(self) -> Column:
         return self.predicate(F.col(self.column))
 
-    def observed(self) -> Column:
-        return F.col(self.column).cast("string")
+
+TS_CANON_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
+
+
+def canonical_str(col: Column, dtype: T.DataType) -> Column:
+    """Frozen formatting spec for the ``observed`` field (byte-match
+    requirement)."""
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        return F.date_format(col, TS_CANON_FMT)
+    return col.cast("string")
+
+
+def violation_struct(constraint: str, column: str, reason: str, observed: Column) -> Column:
+    """One violation in the frozen row format."""
+    return F.struct(
+        F.lit(constraint).alias("constraint"),
+        F.lit(column).alias("column"),
+        F.lit(reason).alias("reason"),
+        observed.alias("observed"),
+    )
+
+
+def explode_violations(
+    df: DataFrame, keep: Sequence[str], checks: Sequence[tuple[Column, Column]]
+) -> DataFrame:
+    """``keep`` columns + one row per ``(predicate, violation_struct)``
+    check whose predicate holds: one projection, no shuffle."""
+    arr = F.filter(F.array(*[F.when(p, v) for p, v in checks]), lambda x: x.isNotNull())
+    return (
+        df.select(*keep, arr.alias("_v"))
+        .where(F.size("_v") > 0)
+        .select(*keep, F.explode("_v").alias("_e"))
+        .select(*keep, "_e.*")
+    )
+
+
+def row_violations(
+    df: DataFrame, constraints: Sequence[RowConstraint], keep: Sequence[str]
+) -> DataFrame:
+    """The row pass: every row constraint evaluated in one scan of ``df``."""
+    schema = df.schema
+    checks = [
+        (
+            c.violation(),
+            violation_struct(
+                c.name,
+                c.column,
+                c.reason,
+                canonical_str(F.col(c.column), schema[c.column].dataType),
+            ),
+        )
+        for c in constraints
+    ]
+    return explode_violations(df, keep, checks)
 
 
 # --------------------------------------------------------------------------

@@ -19,6 +19,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from avro_conversions_spark.constraints.core import (
+    TS_CANON_FMT,
+    explode_violations,
+    violation_struct,
+)
+
 
 @dataclass
 class SequenceConstraint:
@@ -45,48 +51,20 @@ class SequenceConstraint:
         if self.check_contiguous:
             # turn_idx must equal its 0-based rank within the conversation
             out = out.withColumn("_rn", F.row_number().over(w) - 1 + self.start)
+            obs = F.concat_ws("!=", F.col(self.idx_col).cast("string"), F.col("_rn").cast("string"))
             checks.append(
                 (
                     F.col(self.idx_col) != F.col("_rn"),
-                    self.idx_col,
-                    "NONCONTIGUOUS_TURN_IDX",
-                    F.concat_ws(
-                        "!=", F.col(self.idx_col).cast("string"), F.col("_rn").cast("string")
-                    ),
+                    violation_struct(self.name, self.idx_col, "NONCONTIGUOUS_TURN_IDX", obs),
                 )
             )
         if self.check_ts_monotone and self.ts_col:
             out = out.withColumn("_prev_ts", F.lag(self.ts_col).over(w))
+            obs = F.date_format(self.ts_col, TS_CANON_FMT)
             checks.append(
                 (
-                    F.col("_prev_ts").isNotNull()
-                    & (F.col(self.ts_col) < F.col("_prev_ts")),
-                    self.ts_col,
-                    "TS_REGRESSION",
-                    F.date_format(self.ts_col, "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"),
+                    F.col("_prev_ts").isNotNull() & (F.col(self.ts_col) < F.col("_prev_ts")),
+                    violation_struct(self.name, self.ts_col, "TS_REGRESSION", obs),
                 )
             )
-        viol_structs = F.array(
-            *[
-                F.when(
-                    pred,
-                    F.struct(
-                        F.lit(self.name).alias("constraint"),
-                        F.lit(col).alias("column"),
-                        F.lit(reason).alias("reason"),
-                        obs.cast("string").alias("observed"),
-                    ),
-                )
-                for pred, col, reason, obs in checks
-            ]
-        )
-        keep = [self.conv_col, self.idx_col, *extra_cols]
-        return (
-            out.select(
-                *keep,
-                F.filter(viol_structs, lambda x: x.isNotNull()).alias("_v"),
-            )
-            .where(F.size("_v") > 0)
-            .select(*keep, F.explode("_v").alias("_e"))
-            .select(*keep, "_e.*")
-        )
+        return explode_violations(out, [self.conv_col, self.idx_col, *extra_cols], checks)

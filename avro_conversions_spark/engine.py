@@ -8,7 +8,8 @@ Execution shape (designed for 100 TB / 1000 executors; see SURVEY.md §3.3):
    exactly like the reference's resolver compile
    (opwvhk/avro/io/AsAvroParserBase.java:369-398).
 2. row pass: ALL row constraints evaluate in ONE columnar scan — each row
-   projects an array of violation structs, filtered and exploded. Catalyst
+   projects an array of violation structs, filtered and exploded
+   (``constraints.core.row_violations``, shared with streaming). Catalyst
    prunes the scan to exactly the constrained + key columns and fuses the
    predicates into one WholeStageCodegen span. N constraints != N scans.
 3. aggregate passes: uniqueness (salted two-phase agg), referential
@@ -20,9 +21,9 @@ Execution shape (designed for 100 TB / 1000 executors; see SURVEY.md §3.3):
    key — a metadata-cheap second scan, not a second full read.
 
 Output schemas are frozen in FIXTURES.md §5; violation ordering is
-canonical ``ORDER BY key..., constraint`` and observed values use a frozen
-formatting spec (timestamps: ISO-8601 with 6-digit micros + offset,
-decimals: plain string) so golden fixtures byte-match (BASELINE.json:15).
+canonical ``ORDER BY key..., constraint``. Observed values use the frozen
+formatting spec of ``constraints.core.canonical_str`` so golden fixtures
+byte-match (BASELINE.json:15).
 """
 
 from __future__ import annotations
@@ -34,24 +35,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from avro_conversions_spark.constraints.core import RowConstraint
+from avro_conversions_spark.constraints.core import RowConstraint, row_violations
 from avro_conversions_spark.constraints.referential import ReferentialConstraint
 from avro_conversions_spark.constraints.sequence import SequenceConstraint
 from avro_conversions_spark.constraints.uniqueness import UniqueConstraint
 from avro_conversions_spark.session import persist_for_replay
 
-TS_CANON_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
-
 # internal column name for the carried partition key (stripped from outputs)
 _PART = "_acs_part"
-
-
-def canonical_str(col: Column, dtype: T.DataType) -> Column:
-    """Frozen formatting spec for the ``observed`` field (byte-match
-    requirement)."""
-    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        return F.date_format(col, TS_CANON_FMT)
-    return col.cast("string")
 
 
 @dataclass
@@ -92,35 +83,6 @@ class ValidationEngine:
 
                     raise ResolvingFailure(f"unique key column {col!r} absent")
 
-    # ------------------------------------------------------------- row pass
-
-    def _row_violations(self, df: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
-        if not self.row_constraints:
-            return None  # type: ignore[return-value]
-        schema = df.schema
-        structs = []
-        for c in self.row_constraints:
-            dtype = schema[c.column].dataType
-            structs.append(
-                F.when(
-                    c.violation(),
-                    F.struct(
-                        F.lit(c.name).alias("constraint"),
-                        F.lit(c.column).alias("column"),
-                        F.lit(c.reason).alias("reason"),
-                        canonical_str(F.col(c.column), dtype).alias("observed"),
-                    ),
-                )
-            )
-        arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-        sel = [*self.key_cols, *extra_cols]
-        return (
-            df.select(*sel, arr.alias("_v"))
-            .where(F.size("_v") > 0)
-            .select(*sel, F.explode("_v").alias("_e"))
-            .select(*sel, "_e.*")
-        )
-
     # ------------------------------------------------------------ agg passes
 
     def _agg_violations(self, df: DataFrame, part_col: str | None = None) -> list[DataFrame]:
@@ -159,9 +121,9 @@ class ValidationEngine:
 
     def violations_df(self, df: DataFrame, _part_col: str | None = None) -> DataFrame:
         parts: list[DataFrame] = []
-        rv = self._row_violations(df, extra_cols=(_part_col,) if _part_col else ())
-        if rv is not None:
-            parts.append(rv)
+        if self.row_constraints:
+            extra = [_part_col] if _part_col else []
+            parts.append(row_violations(df, self.row_constraints, [*self.key_cols, *extra]))
         parts.extend(self._agg_violations(df, part_col=_part_col))
         if not parts:
             raise ValueError("no constraints configured")

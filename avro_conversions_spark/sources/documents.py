@@ -9,16 +9,24 @@ points (SURVEY.md §2.1 S1-S5, §3.1-3.2):
 - XmlAsAvroParser (opwvhk/avro/xml/XmlAsAvroParser.java:289-308): same
   for XML via SAX.
 
-Here a whole COLUMN of documents parses in one vectorized pass:
+Here a whole COLUMN of documents parses in one vectorized pass, and every
+entry point runs the same two steps (the reference's parsers likewise
+share one resolver base, io/AsAvroParserBase.java:369-398):
 
-1. `from_json`/`from_xml` tokenizes into an all-strings struct (Spark's
-   native, JVM-side parsers — the analogue of the reference's Jackson/SAX
-   streaming stage, S3/S5);
-2. the schema resolver compiles the read schema against that struct
-   exactly like the reference's resolver-compile step, producing typed
-   conversion Columns with defaults/aliases/enum-substitution;
-3. unparseable values become violation rows with reason codes instead of
-   exceptions (V9: an engine scanning 10^12 documents must not throw).
+1. ``_tokenize``: `from_json`/`from_xml` in PERMISSIVE mode yields an
+   all-strings struct (Spark's native, JVM-side parsers — the analogue of
+   the reference's Jackson/SAX streaming stage, S3/S5) plus the
+   `_corrupt` flag for documents that do not parse at all;
+2. ``_typed``: the schema resolver compiles the read schema against the
+   flattened, alias-folded struct exactly like the reference's
+   resolver-compile step, producing typed conversion Columns with
+   defaults/aliases/enum-substitution, and unparseable values become
+   `(column, reason)` violations instead of exceptions (V9: an engine
+   scanning 10^12 documents must not throw).
+
+``parse_json_column`` and ``parse_xml_column`` differ only in the
+tokenizer function; ``parse_xml_with_xsd`` adds occurrence-array
+tokenizing, cardinality violations and raw-subtree reassembly.
 
 Nested structure support deliberately matches the reference: records,
 arrays (no nested arrays), nullable unions, no maps.
@@ -27,6 +35,7 @@ arrays (no nested arrays), nullable unions, no maps.
 from __future__ import annotations
 
 import re
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -34,18 +43,14 @@ from pyspark.sql import types as T
 
 from avro_conversions_spark.schema.model import (
     ArrayType,
-    EnumType,
+    Field,
     FixedType,
+    LogicalType,
     PrimitiveType,
     ReadType,
     RecordType,
-    to_spark_type,
 )
-from avro_conversions_spark.schema.resolution import (
-    SchemaResolver,
-    WriteType,
-    from_spark_schema,
-)
+from avro_conversions_spark.schema.resolution import SchemaResolver, from_spark_schema
 
 
 def _tokenizer_schema(rt: ReadType) -> T.DataType:
@@ -61,23 +66,21 @@ def _tokenizer_schema(rt: ReadType) -> T.DataType:
     return T.StringType()
 
 
-def _annotations(rt: ReadType) -> dict:
+def _annotations(rt: ReadType, binary_encoding: str) -> dict:
     """WriteType annotations needed for resolution of string leaves:
     date/time/timestamp formats and binary encodings come from the READ
     side here (trust-the-format), mirroring the reference's base rules."""
     if isinstance(rt, RecordType):
         out = {}
         for f in rt.fields:
-            ann = _annotations(f.type)
+            ann = _annotations(f.type, binary_encoding)
             if ann:
                 for n in f.match_names():
                     out[n] = ann
         return out
     if isinstance(rt, ArrayType):
-        inner = _annotations(rt.items)
+        inner = _annotations(rt.items, binary_encoding)
         return {"items": inner} if inner else {}
-    from avro_conversions_spark.schema.model import LogicalType
-
     if isinstance(rt, LogicalType):
         if rt.kind == "date":
             return {"format": "date"}
@@ -85,27 +88,110 @@ def _annotations(rt: ReadType) -> dict:
             return {"format": "time"}
         return {"format": "date-time"}
     if isinstance(rt, FixedType) or (isinstance(rt, PrimitiveType) and rt.kind == "bytes"):
-        return {"content_encoding": "base64"}
+        return {"content_encoding": binary_encoding}
     return {}
 
 
-def _resolve(parsed_type: T.StructType, read: RecordType, binary_encoding: str):
-    ann = _annotations(read)
+def _violation(pred: Column, column: str, reason: str) -> Column:
+    return F.when(pred, F.struct(F.lit(column).alias("column"), F.lit(reason).alias("reason")))
 
-    def override_encoding(d: dict) -> dict:
-        return {
-            k: (
-                {**v, "content_encoding": binary_encoding}
-                if isinstance(v, dict) and "content_encoding" in v
-                else (override_encoding(v) if isinstance(v, dict) else v)
-            )
-            for k, v in d.items()
-        }
 
-    if binary_encoding != "base64":
-        ann = override_encoding(ann)
-    wt = from_spark_schema(parsed_type, ann)
-    return SchemaResolver(strict_nullability=False, trust_reader=True).resolve_record(wt, read)
+def _non_null(structs: Sequence[Column]) -> Column:
+    return F.filter(F.array(*structs), lambda x: x.isNotNull())
+
+
+def _merged(f: Field) -> Column:
+    """Alias matching (doc/index.md:34-47): the tokenizer captured every
+    alias as its own field; fold them into the primary name. getField, not
+    a dotted path string: legal XML names may contain '.'."""
+    return F.coalesce(*[F.col("_doc").getField(n) for n in f.match_names()])
+
+
+def _tokenize(
+    df: DataFrame,
+    doc_col: str,
+    tok_fields: list[T.StructField],
+    from_fn: Callable[..., Column],
+    keep_cols: list[str],
+    options: dict | None = None,
+) -> DataFrame:
+    """keep_cols + `_raw` text + `_doc` all-strings struct + `_corrupt`.
+
+    PERMISSIVE mode puts the raw text of an unparseable document into the
+    corrupt-record column instead of failing: the reference throws per
+    document (IOException "Invalid JSON", JsonAsAvroParserTest.java:90-95;
+    SAXException, XmlResolvingTest.java:163-212) and V9 turns that into a
+    row flag. from_xml alone returns a null-filled struct, not null, so the
+    corrupt-record column is what flags a non-XML document."""
+    parsed = from_fn(
+        F.col(doc_col),
+        T.StructType(tok_fields + [T.StructField("_corrupt_record", T.StringType(), True)]),
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record", **(options or {})},
+    )
+    staged = df.select(*keep_cols, F.col(doc_col).alias("_raw"), parsed.alias("_doc"))
+    return staged.withColumn(
+        "_corrupt",
+        F.col("_raw").isNotNull()
+        & (F.col("_doc").isNull() | F.col("_doc._corrupt_record").isNotNull()),
+    )
+
+
+def _typed(
+    staged: DataFrame,
+    read: RecordType,
+    binary_encoding: str,
+    keep_cols: list[str],
+    value_cols: list[Column],
+    struct_viols: Sequence[Column] = (),
+) -> DataFrame:
+    """Resolve the tokenized values under ``read``: keep_cols + one typed
+    column per read field + `_violations` (array of (column, reason)
+    structs; ``struct_viols`` first, then the resolver's) + `_corrupt`."""
+    # structural violations reference `_doc`, so they must materialize in
+    # THIS projection — `flat` drops `_doc`
+    flat = staged.select(
+        *keep_cols,
+        "_raw",
+        "_corrupt",
+        *([_non_null(struct_viols).alias("_struct_viols")] if struct_viols else []),
+        *value_cols,
+    )
+    names = {f.name for f in read.fields}
+    wt = from_spark_schema(
+        T.StructType([x for x in flat.schema.fields if x.name in names]),
+        _annotations(read, binary_encoding),
+    )
+    plans = SchemaResolver(strict_nullability=False, trust_reader=True).resolve_record(wt, read)
+    viols = [
+        _violation(vp, p.name, p.converter.reason or "UNPARSEABLE")
+        for p in plans
+        if (vp := p.violation_pred()) is not None
+    ]
+    arrays = [F.col("_struct_viols")] if struct_viols else []
+    if viols:
+        arrays.append(_non_null(viols))
+    viol_arr = F.concat(*arrays) if len(arrays) > 1 else arrays[0] if arrays else F.array()
+    return flat.select(
+        *keep_cols,
+        *[p.value() for p in plans],
+        viol_arr.alias("_violations"),
+        "_corrupt",
+    )
+
+
+def _parse(
+    df: DataFrame,
+    doc_col: str,
+    read: RecordType,
+    binary_encoding: str,
+    keep_cols: list[str] | None,
+    from_fn: Callable[..., Column],
+) -> DataFrame:
+    """Plain JSON / XML: one tokenizer field per read-field name."""
+    keep = keep_cols or []
+    staged = _tokenize(df, doc_col, list(_tokenizer_schema(read).fields), from_fn, keep)
+    values = [_merged(f).alias(f.name) for f in read.fields]
+    return _typed(staged, read, binary_encoding, keep, values)
 
 
 def parse_json_column(
@@ -122,69 +208,7 @@ def parse_json_column(
     document is not valid JSON at all — reference behavior:
     IOException 'Invalid JSON', json/JsonAsAvroParserTest.java:90-95).
     """
-    tok_schema = _tokenizer_schema(read)
-    # PERMISSIVE mode puts the raw text of unparseable documents into the
-    # corrupt-record column instead of failing (the reference throws
-    # IOException "Invalid JSON" per document — V9 says: violation, not
-    # exception)
-    tok_with_corrupt = T.StructType(
-        list(tok_schema.fields) + [T.StructField("_corrupt_record", T.StringType(), True)]
-    )
-    parsed = F.from_json(
-        F.col(json_col),
-        tok_with_corrupt,
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
-    )
-    staged = df.select(
-        *(keep_cols or []),
-        F.col(json_col).alias("_raw"),
-        parsed.alias("_doc"),
-    )
-    staged = staged.withColumn(
-        "_corrupt",
-        F.col("_raw").isNotNull()
-        & (F.col("_doc").isNull() | F.col("_doc._corrupt_record").isNotNull()),
-    )
-    flat = staged.select(
-        *(keep_cols or []),
-        "_raw",
-        "_corrupt",
-        # alias matching (doc/index.md:34-47): the tokenizer captured every
-        # alias as its own field; fold them into the primary name here
-        *[
-            F.coalesce(*[F.col("_doc").getField(n) for n in f.match_names()]).alias(f.name)
-            for f in read.fields
-        ],
-    )
-    plans = _resolve(
-        T.StructType(
-            [x for x in flat.schema.fields if x.name in {f.name for f in read.fields}]
-        ),
-        read,
-        binary_encoding,
-    )
-    viols = []
-    for p in plans:
-        vp = p.violation_pred()
-        if vp is not None:
-            viols.append(
-                F.when(
-                    vp,
-                    F.struct(
-                        F.lit(p.name).alias("column"),
-                        F.lit(p.converter.reason or "UNPARSEABLE").alias("reason"),
-                    ),
-                )
-            )
-    viol_arr = (
-        F.filter(F.array(*viols), lambda x: x.isNotNull()) if viols else F.array()
-    )
-    return flat.select(
-        *(keep_cols or []),
-        *[p.value() for p in plans],
-        viol_arr.alias("_violations"),
-        "_corrupt",
-    )
+    return _parse(df, json_col, read, binary_encoding, keep_cols, F.from_json)
 
 
 def parse_xml_column(
@@ -197,67 +221,7 @@ def parse_xml_column(
     """XML variant (reference: XmlAsAvroParser). Spark 4 ships from_xml
     natively; repeated elements map to arrays in the tokenizer schema, the
     cardinality rules (R36) are enforced by the resolver."""
-    tok_schema = _tokenizer_schema(read)
-    # PERMISSIVE + corrupt-record column: a document that is not XML at all
-    # must flag _corrupt (the reference raises SAXException per document,
-    # xml/XmlResolvingTest.java:163-212 — V9 turns that into a row flag);
-    # from_xml alone returns a null-filled struct, not null
-    tok_with_corrupt = T.StructType(
-        list(tok_schema.fields) + [T.StructField("_corrupt_record", T.StringType(), True)]
-    )
-    parsed = F.from_xml(
-        F.col(xml_col),
-        tok_with_corrupt,
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
-    )
-    staged = df.select(
-        *(keep_cols or []), F.col(xml_col).alias("_raw"), parsed.alias("_doc")
-    )
-    staged = staged.withColumn(
-        "_corrupt",
-        F.col("_raw").isNotNull()
-        & (F.col("_doc").isNull() | F.col("_doc._corrupt_record").isNotNull()),
-    )
-    flat = staged.select(
-        *(keep_cols or []),
-        "_raw",
-        "_corrupt",
-        # alias matching (doc/index.md:34-47): the tokenizer captured every
-        # alias as its own field; fold them into the primary name here
-        *[
-            F.coalesce(*[F.col("_doc").getField(n) for n in f.match_names()]).alias(f.name)
-            for f in read.fields
-        ],
-    )
-    plans = _resolve(
-        T.StructType(
-            [x for x in flat.schema.fields if x.name in {f.name for f in read.fields}]
-        ),
-        read,
-        binary_encoding,
-    )
-    viols = []
-    for p in plans:
-        vp = p.violation_pred()
-        if vp is not None:
-            viols.append(
-                F.when(
-                    vp,
-                    F.struct(
-                        F.lit(p.name).alias("column"),
-                        F.lit(p.converter.reason or "UNPARSEABLE").alias("reason"),
-                    ),
-                )
-            )
-    viol_arr = (
-        F.filter(F.array(*viols), lambda x: x.isNotNull()) if viols else F.array()
-    )
-    return flat.select(
-        *(keep_cols or []),
-        *[p.value() for p in plans],
-        viol_arr.alias("_violations"),
-        "_corrupt",
-    )
+    return _parse(df, xml_col, read, binary_encoding, keep_cols, F.from_xml)
 
 
 def read_json_documents(
@@ -268,7 +232,7 @@ def read_json_documents(
     in parallel; schema inference is skipped (we declare the tokenizer
     schema), which also avoids a full inference pre-pass."""
     raw = spark.read.text(path).withColumnRenamed("value", "_json")
-    return parse_json_column(raw, "_json", read)
+    return parse_json_column(raw, "_json", read, binary_encoding)
 
 
 def parse_xml_with_xsd(
@@ -341,28 +305,11 @@ def parse_xml_with_xsd(
             tok_fields.append(
                 T.StructField(n, inner if multiple else T.ArrayType(inner, True), True)
             )
-    tok_with_corrupt = T.StructType(
-        tok_fields + [T.StructField("_corrupt_record", T.StringType(), True)]
-    )
-    parsed = F.from_xml(
-        F.col(xml_col),
-        tok_with_corrupt,
-        {
-            "mode": "PERMISSIVE",
-            "columnNameOfCorruptRecord": "_corrupt_record",
-            # attributes and simpleContent text map onto the read schema's
-            # plain field names ('type', 'value'), not '_type' / '_VALUE'
-            "attributePrefix": "",
-            "valueTag": "value",
-        },
-    )
-    staged = df.select(
-        *(keep_cols or []), F.col(xml_col).alias("_raw"), parsed.alias("_doc")
-    )
-    staged = staged.withColumn(
-        "_corrupt",
-        F.col("_raw").isNotNull()
-        & (F.col("_doc").isNull() | F.col("_doc._corrupt_record").isNotNull()),
+    keep = keep_cols or []
+    # attributes and simpleContent text map onto the read schema's plain
+    # field names ('type', 'value'), not '_type' / '_VALUE'
+    staged = _tokenize(
+        df, xml_col, tok_fields, F.from_xml, keep, {"attributePrefix": "", "valueTag": "value"}
     )
 
     def _raw_subtree(tag: str) -> Column:
@@ -380,9 +327,7 @@ def parse_xml_with_xsd(
     # structural checks + scalarization of the occurrence arrays
     value_cols, struct_viols = [], []
     for f in read.fields:
-        # getField, not a dotted path string — legal XML names may contain
-        # '.', which F.col("_doc.a.b") would mis-parse as nesting
-        merged = F.coalesce(*[F.col("_doc").getField(n) for n in f.match_names()])
+        merged = _merged(f)
         card = cards.get(f.name, Card.OPTIONAL)
         if card == Card.MULTIPLE:
             value_cols.append(merged.alias(f.name))
@@ -390,22 +335,10 @@ def parse_xml_with_xsd(
         n_occ = F.coalesce(F.array_size(merged), F.lit(0))
         if card == Card.REQUIRED:
             struct_viols.append(
-                F.when(
-                    ~F.col("_corrupt") & (n_occ == 0),
-                    F.struct(
-                        F.lit(f.name).alias("column"),
-                        F.lit("MISSING_REQUIRED_ELEMENT").alias("reason"),
-                    ),
-                )
+                _violation(~F.col("_corrupt") & (n_occ == 0), f.name, "MISSING_REQUIRED_ELEMENT")
             )
         struct_viols.append(
-            F.when(
-                ~F.col("_corrupt") & (n_occ > 1),
-                F.struct(
-                    F.lit(f.name).alias("column"),
-                    F.lit("TOO_MANY_ELEMENTS").alias("reason"),
-                ),
-            )
+            _violation(~F.col("_corrupt") & (n_occ > 1), f.name, "TOO_MANY_ELEMENTS")
         )
         scalar = F.element_at(merged, 1)
         if f.name in unparsed_fields and isinstance(f.type, RecordType):
@@ -419,52 +352,4 @@ def parse_xml_with_xsd(
             ]
             scalar = F.when(scalar.isNotNull(), F.struct(*members))
         value_cols.append(scalar.alias(f.name))
-
-    # structural violations reference `_doc` occurrence arrays, so they
-    # must materialize in THIS projection — `flat` drops `_doc`
-    struct_viol_arr = (
-        F.filter(F.array(*struct_viols), lambda x: x.isNotNull())
-        if struct_viols
-        else None
-    )
-    flat = staged.select(
-        *(keep_cols or []),
-        "_raw",
-        "_corrupt",
-        *( [struct_viol_arr.alias("_struct_viols")] if struct_viol_arr is not None else [] ),
-        *value_cols,
-    )
-    plans = _resolve(
-        T.StructType(
-            [x for x in flat.schema.fields if x.name in {f.name for f in read.fields}]
-        ),
-        read,
-        binary_encoding,
-    )
-    viols = []
-    for p in plans:
-        vp = p.violation_pred()
-        if vp is not None:
-            viols.append(
-                F.when(
-                    vp,
-                    F.struct(
-                        F.lit(p.name).alias("column"),
-                        F.lit(p.converter.reason or "UNPARSEABLE").alias("reason"),
-                    ),
-                )
-            )
-    if viols:
-        viol_arr = F.filter(F.array(*viols), lambda x: x.isNotNull())
-        if struct_viol_arr is not None:
-            viol_arr = F.concat(F.col("_struct_viols"), viol_arr)
-    elif struct_viol_arr is not None:
-        viol_arr = F.col("_struct_viols")
-    else:
-        viol_arr = F.array()
-    return flat.select(
-        *(keep_cols or []),
-        *[p.value() for p in plans],
-        viol_arr.alias("_violations"),
-        "_corrupt",
-    )
+    return _typed(staged, read, binary_encoding, keep, value_cols, struct_viols)

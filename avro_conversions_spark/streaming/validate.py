@@ -3,7 +3,8 @@ a stream, with watermarked windowed violation aggregation.
 
 The batch engine's row constraints are pure Column expressions, so they
 apply verbatim to a streaming DataFrame — the single-scan violation
-projection (engine.py) is reused, only the sink differs. Aggregate
+projection (``constraints.core.row_violations``) is the batch engine's own,
+``observed`` formatting included; only the sink differs. Aggregate
 constraints that need global state (uniqueness, drift) stay batch-side;
 streaming covers the monitoring path: per-window violation counts with
 late-data handling via watermarks (SURVEY.md §2.8 notes streaming is out
@@ -18,7 +19,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from avro_conversions_spark.constraints.core import RowConstraint
+from avro_conversions_spark.constraints.core import RowConstraint, row_violations
 
 
 def streaming_violations(
@@ -26,27 +27,9 @@ def streaming_violations(
     constraints: Sequence[RowConstraint],
     key_cols: Sequence[str] = ("conv_id", "turn_idx"),
 ) -> DataFrame:
-    """Violation rows from a streaming source — identical projection to the
-    batch engine's row pass (one select, no shuffle, fully pipelined)."""
-    structs = [
-        F.when(
-            c.violation(),
-            F.struct(
-                F.lit(c.name).alias("constraint"),
-                F.lit(c.column).alias("column"),
-                F.lit(c.reason).alias("reason"),
-                F.col(c.column).cast("string").alias("observed"),
-            ),
-        )
-        for c in constraints
-    ]
-    arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-    return (
-        stream.select(*key_cols, "ts", arr.alias("_v"))
-        .where(F.size("_v") > 0)
-        .select(*key_cols, "ts", F.explode("_v").alias("_e"))
-        .select(*key_cols, "ts", "_e.*")
-    )
+    """Violation rows from a streaming source — the batch engine's row
+    pass (one select, no shuffle, fully pipelined) keeping ``ts``."""
+    return row_violations(stream, constraints, [*key_cols, "ts"])
 
 
 def windowed_violation_counts(

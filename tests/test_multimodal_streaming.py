@@ -86,6 +86,47 @@ def test_streaming_windowed_counts(spark, tmp_path):
     assert got[("2024-01-01 00:01:00", "not_null(conv_id)")] == 1
 
 
+def test_streaming_violations_match_engine_rows(spark, tmp_path):
+    """The streaming row pass emits the batch engine's violation rows,
+    ``observed`` included: a timestamp renders in the frozen ISO format."""
+    import datetime
+
+    from avro_conversions_spark.constraints import not_null, range_check
+    from avro_conversions_spark.engine import ValidationEngine
+    from avro_conversions_spark.streaming.validate import streaming_violations
+
+    src_path = str(tmp_path / "obs_src")
+    spark.createDataFrame(
+        [
+            ("c1", 0, "2024-01-01 00:00:10"),
+            ("c1", 1, "2024-01-01 00:00:20.123456"),  # after the bound
+            (None, 2, "2023-12-31 23:59:59"),  # null conv_id
+        ],
+        "conv_id string, turn_idx int, ts_s string",
+    ).select("conv_id", "turn_idx", F.col("ts_s").cast("timestamp").alias("ts")).write.parquet(
+        src_path
+    )
+    bound = datetime.datetime(2024, 1, 1, 0, 0, 15)
+    constraints = [not_null("conv_id"), range_check("ts", hi=bound)]
+    cols = ["conv_id", "turn_idx", "constraint", "column", "reason", "observed"]
+
+    batch = ValidationEngine(row_constraints=constraints).run(spark.read.parquet(src_path))
+    stream = spark.readStream.schema("conv_id string, turn_idx int, ts timestamp").parquet(src_path)
+    q = (
+        streaming_violations(stream, constraints)
+        .writeStream.format("memory")
+        .queryName("stream_obs")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = sorted((tuple(r) for r in spark.table("stream_obs").select(*cols).collect()), key=repr)
+    want = sorted((tuple(r) for r in batch.violations.select(*cols).collect()), key=repr)
+    batch.unpersist()
+    assert got == want
+    assert ("c1", 1, "range(ts)", "ts", "VALUE_OUT_OF_RANGE", "2024-01-01T00:00:20.123456Z") in got
+
+
 def test_stateful_sequence_violations(spark, tmp_path):
     """applyInPandasWithState: incremental per-conversation validation
     across two micro-batches with carried state."""

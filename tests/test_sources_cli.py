@@ -79,6 +79,74 @@ def test_parse_xml_with_repeated_elements(spark, read_schema):
     assert r.amount == Decimal("1.25") and r.when_ == datetime.date(2023, 5, 6)
 
 
+# one document per case, rendered as JSON and as XML by the parity test
+_PARITY_DOCS = [
+    # full document
+    {"id": "1", "name": "a", "amount": "12.34", "when_": "2024-01-02", "status": "bad",
+     "tags": ["x", "y"], "added": "given"},
+    # alias + enum default + array default + field default
+    {"id": "2", "title": "renamed", "amount": "1.5", "when_": "2024-03-04", "status": "weird"},
+    # three resolver violations, in read-field order
+    {"id": "NaNope", "name": "x", "amount": "99999999", "when_": "2024-88-88"},
+]
+
+
+def _as_json(doc: dict) -> str:
+    return json.dumps(doc)
+
+
+def _as_xml(doc: dict) -> str:
+    body = "".join(
+        "".join(f"<{k}>{x}</{k}>" for x in (v if isinstance(v, list) else [v]))
+        for k, v in doc.items()
+    )
+    return f"<r>{body}</r>"
+
+
+@pytest.mark.parametrize(
+    "parse,render",
+    [(parse_json_column, _as_json), (parse_xml_column, _as_xml)],
+    ids=["json", "xml"],
+)
+def test_json_xml_parity(spark, read_schema, parse, render):
+    """JSON and XML resolve through one shared path: the same content gives
+    the same typed rows and the same `_violations`, in the same order."""
+    df = spark.createDataFrame(
+        [(i, render(d)) for i, d in enumerate(_PARITY_DOCS)], "i int, doc string"
+    )
+    out = parse(df, "doc", read_schema, keep_cols=["i"]).orderBy("i")
+    rows = [r.asDict(recursive=True) for r in out.collect()]
+    assert rows == [
+        {"i": 0, "id": 1, "name": "a", "amount": Decimal("12.34"),
+         "when_": datetime.date(2024, 1, 2), "status": "bad", "tags": ["x", "y"],
+         "added": "given", "_violations": [], "_corrupt": False},
+        {"i": 1, "id": 2, "name": "renamed", "amount": Decimal("1.50"),
+         "when_": datetime.date(2024, 3, 4), "status": "ok", "tags": [],
+         "added": "dflt", "_violations": [], "_corrupt": False},
+        # an absent enum field stays null: the enum default only replaces
+        # unknown symbols
+        {"i": 2, "id": None, "name": "x", "amount": None, "when_": None, "status": None,
+         "tags": [], "added": "dflt", "_corrupt": False, "_violations": [
+             {"column": "id", "reason": "INVALID_INTEGER"},
+             {"column": "amount", "reason": "DECIMAL_OUT_OF_RANGE"},
+             {"column": "when_", "reason": "INVALID_DATE"},
+         ]},
+    ]
+
+
+def test_read_json_documents_binary_encoding(spark, tmp_path):
+    """The file source honours ``binary_encoding`` exactly like the column
+    parser: hex text read as base16 decodes to its bytes."""
+    from avro_conversions_spark.sources.documents import read_json_documents
+
+    rt, _ = from_avsc(
+        '{"type":"record","name":"B","fields":[{"name":"b","type":["null","bytes"]}]}'
+    )
+    (tmp_path / "docs.json").write_text('{"b": "48656c6c6f"}\n')
+    rows = read_json_documents(spark, str(tmp_path), rt, binary_encoding="base16").collect()
+    assert [(bytes(r.b), r._violations, r._corrupt) for r in rows] == [(b"Hello", [], False)]
+
+
 def test_string_number_rules(spark):
     """Tokenizer leaves are strings; numeric reads get regex+overflow guards."""
     rt, _ = from_avsc(
