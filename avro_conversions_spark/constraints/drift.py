@@ -70,7 +70,7 @@ class DriftConstraint:
                 f"expected columns {list(SNAPSHOT_COLUMNS)}, missing {missing}"
             )
         base = {r["column"]: r for r in base_df.collect()}
-        cur = {r["column"]: r for r in self.snapshot(df).collect()}
+        cur = tdigest_columns(df, self.columns, self.delta)
         out = []
         for c in self.columns:
             b = base.get(c)
@@ -79,11 +79,7 @@ class DriftConstraint:
                     {"column": c, "ks": None, "threshold": self.threshold, "status": "no_baseline"}
                 )
                 continue
-            k = cur[c]
-            d = ks_from_digests(
-                np.asarray(b["means"]), np.asarray(b["weights"]),
-                np.asarray(k["means"]), np.asarray(k["weights"]),
-            )
+            d = ks_from_digests(np.asarray(b["means"]), np.asarray(b["weights"]), *cur[c])
             out.append(
                 {
                     "column": c,

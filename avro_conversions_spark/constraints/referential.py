@@ -3,6 +3,11 @@
 SURVEY.md §2.8: small dimension → broadcast left_anti join (no shuffle of
 the fact table); large dimension → sort-merge left_anti (AQE may still
 convert to broadcast at runtime if the built side turns out small).
+
+An anti join's existence test ignores duplicate dimension keys, so the
+dimension is deduplicated only on the sort-merge path: there the join
+shuffles the dimension anyway and the partial aggregate shrinks that
+shuffle. Under a broadcast the dedup would add an exchange and a job.
 """
 
 from __future__ import annotations
@@ -29,9 +34,8 @@ class ReferentialConstraint:
 
     def violations(self, df: DataFrame) -> DataFrame:
         """Rows whose ``column`` value is absent from the dimension."""
-        dim = self.dim.select(F.col(self.dim_column).alias(self.column)).dropDuplicates()
-        if self.broadcast:
-            dim = F.broadcast(dim)
+        dim = self.dim.select(F.col(self.dim_column).alias(self.column))
+        dim = F.broadcast(dim) if self.broadcast else dim.dropDuplicates()
         facts = df if not self.ignore_nulls else df.where(F.col(self.column).isNotNull())
         return facts.join(dim, on=self.column, how="left_anti")
 

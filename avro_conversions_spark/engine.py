@@ -16,9 +16,12 @@ Execution shape (designed for 100 TB / 1000 executors; see SURVEY.md §3.3):
    (broadcast/sort-merge anti join), sequence (per-conversation window) each
    contribute violation rows; their shuffles are keyed independently so AQE
    can size each exchange.
-4. verdicts: violation counts come from the (small) violations output;
-   rows_checked comes from a column-pruned count over only the partition
-   key — a metadata-cheap second scan, not a second full read.
+4. verdicts: ONE aggregate over the union of the input's partition key
+   (a column-pruned read) and the cached violations' (partition,
+   constraint) pairs gives rows_checked and one violation count per
+   constraint for each partition; no join with the constraint names, and
+   the partitions x constraints rows sort inside one task instead of a
+   range-partitioned global sort.
 
 Output schemas are frozen in FIXTURES.md §5; violation ordering is
 canonical ``ORDER BY key..., constraint``. Observed values use the frozen
@@ -43,6 +46,19 @@ from avro_conversions_spark.session import persist_for_replay
 
 # internal column name for the carried partition key (stripped from outputs)
 _PART = "_acs_part"
+# one verdict count row per (partition, constraint); the type pins the
+# verdict schema's nullability: partition_key and constraint nullable
+_VERDICT_COUNTS = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("partition_key", T.StringType(), True),
+            T.StructField("constraint", T.StringType(), True),
+            T.StructField("violation_count", T.LongType(), False),
+            T.StructField("rows_checked", T.LongType(), False),
+        ]
+    ),
+    containsNull=False,
+)
 
 
 @dataclass
@@ -155,8 +171,8 @@ class ValidationEngine:
         # full-table dropDuplicates — at 100 TB that join was an extra
         # whole-table exchange just to map violation -> partition.
         # The constraint families (row pass, uniqueness, referential,
-        # sequence, rows_checked) are independent consumers, each re-decoding
-        # the source (5 scans of the pruned columns; measured plan). Under
+        # sequence) and the verdict aggregate are independent consumers, each
+        # re-decoding the source (5 scans of the pruned columns). Under
         # remoteStorage the PRUNED projection (constrained + key columns only;
         # a transcript table's text/payload never enters) is persisted so the
         # source is read ONCE. Measured on a LOCAL 42M-turn parquet table that
@@ -189,44 +205,60 @@ class ValidationEngine:
             + [r.name for r in self.referential_constraints]
             + [s.name for s in self.sequence_constraints]
         )
-        names_df = df.sparkSession.createDataFrame(
-            [(n,) for n in all_names], "constraint string"
+        # ONE aggregate over data the run already produces: every input row
+        # (constraint NULL) and every violation row, grouped by partition.
+        # Violations whose pass couldn't attribute a partition (e.g.
+        # null-keyed) land in a dedicated bucket instead of being dropped.
+        tagged = pdf.select(
+            F.col(_PART).alias("partition_key"),
+            F.lit(None).cast("string").alias("constraint"),
+        ).unionByName(
+            vint.select(
+                F.coalesce(F.col(_PART), F.lit("unattributed")).alias("partition_key"),
+                "constraint",
+            )
         )
-
-        # rows_checked: column-pruned scan over just the partition expression
-        rows_checked = (
-            pdf.select(F.col(_PART).alias("partition_key"))
-            .groupBy("partition_key")
-            .agg(F.count(F.lit(1)).alias("rows_checked"))
+        counts = tagged.groupBy("partition_key").agg(
+            F.count(F.when(F.col("constraint").isNull(), 1)).alias("rows_checked"),
+            *[
+                F.count(F.when(F.col("constraint") == n, 1)).alias(f"_v{i}")
+                for i, n in enumerate(all_names)
+            ],
         )
-        # violation counts straight from the carried partition column; rows
-        # whose pass couldn't attribute a partition (e.g. null-keyed) land in
-        # a dedicated bucket instead of being silently dropped
-        vio_counts = vint.groupBy(
-            F.coalesce(F.col(_PART), F.lit("unattributed")).alias("partition_key"),
-            "constraint",
-        ).agg(F.count(F.lit(1)).alias("violation_count"))
-
-        # FULL outer join: a nonzero violation_count must surface even when
-        # its partition_key matches no rows_checked partition (the silent
-        # false-pass bug this replaces)
+        # one count row per configured name, then the filter keeps every
+        # name for every input partition (NULL key included) and a name in a
+        # violation-only partition (e.g. ``unattributed``) only where it has
+        # violations. coalesce(1) sits above the aggregate's exchange:
+        # partitions x constraints rows, sorted without a range-sampling job.
+        per_name = F.array(
+            *[
+                F.struct(
+                    "partition_key",
+                    F.lit(n).alias("constraint"),
+                    F.col(f"_v{i}").alias("violation_count"),
+                    "rows_checked",
+                )
+                for i, n in enumerate(all_names)
+            ]
+        ).cast(_VERDICT_COUNTS)
         verdicts = (
-            rows_checked.crossJoin(names_df)
-            .join(vio_counts, ["partition_key", "constraint"], "full")
+            counts.select(F.inline(per_name))
+            .where((F.col("rows_checked") > 0) | (F.col("violation_count") > 0))
             .select(
                 F.lit(run_id).alias("run_id"),
                 "partition_key",
                 "constraint",
-                F.when(F.coalesce("violation_count", F.lit(0)) > 0, F.lit("fail"))
+                F.when(F.col("violation_count") > 0, F.lit("fail"))
                 .otherwise(F.lit("pass"))
                 .alias("status"),
-                F.coalesce("violation_count", F.lit(0)).alias("violation_count"),
-                F.coalesce("rows_checked", F.lit(0)).alias("rows_checked"),
+                "violation_count",
+                "rows_checked",
                 F.create_map(
                     F.lit("engine"), F.lit("avro_conversions_spark"),
                 ).alias("metrics"),
             )
-            .orderBy("partition_key", "constraint")
+            .coalesce(1)
+            .sortWithinPartitions("partition_key", "constraint")
         )
         return ValidationResult(
             verdicts=verdicts,

@@ -148,8 +148,10 @@ class ResumableValidation:
                 ).option("partitionOverwriteMode", "dynamic").partitionBy(
                     "partition_key"
                 ).parquet(violations_path)
-            rows = res.verdicts.agg(F.max("rows_checked")).collect()[0][0] or 0
-            n_viol = res.verdicts.agg(F.sum("violation_count")).collect()[0][0] or 0
+            rows, n_viol = res.verdicts.agg(
+                F.max("rows_checked"), F.sum("violation_count")
+            ).collect()[0]
+            rows, n_viol = rows or 0, n_viol or 0
             res.unpersist()  # drop the bucket's cached violations
             self.ledger.commit(
                 run_id,

@@ -96,18 +96,46 @@ def test_partitioned_verdicts_count_nonkey_unique_violations(spark):
 
 
 def test_null_partition_key_lands_in_unattributed_bucket(spark):
+    schema = "event_id string, user_id string, day string"
     df = spark.createDataFrame(
-        [("e1", None, "d1"), ("e2", "u2", None)],
-        "event_id string, user_id string, day string",
+        [
+            ("e1", None, "d1"),
+            ("e2", "u2", None),
+            ("e3", None, None),
+            ("e4", "u1", "d2"),
+            ("e5", "u1", None),
+            ("e6", "u2", "d1"),
+        ],
+        schema,
     )
     eng = ValidationEngine(
         row_constraints=[not_null("user_id")],
+        unique_constraints=[UniqueConstraint(("user_id",))],
         key_cols=("event_id",),
         partition_expr=F.col("day"),
     )
     res = eng.run(df, "t")
-    rows = {(r.partition_key, r.status, r.violation_count) for r in res.verdicts.collect()}
-    # e1's null user_id happened in partition d1 -> attributed there; no
-    # violation is ever silently dropped
-    assert ("d1", "fail", 1) in rows
+    rows = [
+        (r.partition_key, r.constraint, r.status, r.violation_count, r.rows_checked)
+        for r in res.verdicts.collect()
+    ]
+    # every name for every input partition, the NULL key included (sorted
+    # first); e1's null user_id is attributed to d1; e3's null user_id in
+    # the NULL partition lands in ``unattributed``, which only lists the
+    # constraints that have such violations. No violation is ever dropped.
+    assert rows == [
+        (None, "not_null(user_id)", "pass", 0, 3),
+        (None, "unique(user_id)", "pass", 0, 3),
+        ("d1", "not_null(user_id)", "fail", 1, 2),
+        ("d1", "unique(user_id)", "fail", 2, 2),
+        ("d2", "not_null(user_id)", "pass", 0, 1),
+        ("d2", "unique(user_id)", "fail", 1, 1),
+        ("unattributed", "not_null(user_id)", "fail", 1, 0),
+    ]
+    assert [f.nullable for f in res.verdicts.schema.fields] == [
+        False, True, True, False, False, False, False,
+    ]
     res.unpersist()
+    empty = eng.run(spark.createDataFrame([], schema), "t")
+    assert empty.verdicts.collect() == []
+    empty.unpersist()

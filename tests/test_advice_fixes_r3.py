@@ -462,6 +462,36 @@ def test_referential_non_broadcast_uses_sort_merge(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+def test_referential_broadcast_skips_dim_dedup(spark):
+    """An anti join ignores duplicate dimension keys: the broadcast path
+    reads the dimension as is (no exchange under the BroadcastExchange) and
+    finds the same dangling rows as the deduplicating sort-merge path."""
+    from avro_conversions_spark.constraints import ReferentialConstraint
+
+    catalog = spark.createDataFrame(
+        [("search", "1.2.0"), ("search", "2.0.0"), ("calculator", "0.9.1")],
+        "tool_name string, tool_version string",
+    )
+    facts = spark.createDataFrame(
+        [(1, "search"), (2, "ghost"), (3, None), (4, "calculator"), (5, "ghost")],
+        "id int, tool string",
+    )
+
+    def dangling(broadcast):
+        r = ReferentialConstraint("tool", catalog, "tool_name", broadcast=broadcast)
+        v = r.violations(facts)
+        return v, sorted(map(tuple, v.collect()))
+
+    bv, got = dangling(True)
+    assert got == [("ghost", 2), ("ghost", 5)]  # join key first
+    assert dangling(False)[1] == got
+    # the fact side never shuffles under a broadcast anti join, so every
+    # Exchange in the plan must be the BroadcastExchange itself
+    plan = bv._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" in plan and "LeftAnti" in plan
+    assert plan.count("Exchange") == plan.count("BroadcastExchange")
+
+
 # ---------------------------------------------------------------- counts
 
 

@@ -25,6 +25,31 @@ def test_drift_detects_shift(spark, tmp_path):
     assert res["status"] == "fail" and res["ks"] > 0.3
 
 
+def _jobs_run_by(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts, counted by job group."""
+    sc = spark.sparkContext
+    group = "count-jobs"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001 — status is async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_drift_check_digests_current_data_once(spark, tmp_path):
+    """check() reads the baseline and digests the current data; it builds
+    no intermediate snapshot frame to collect back."""
+    base = spark.range(2_000).select((F.col("id") % 100).cast("double").alias("v"))
+    path = str(tmp_path / "baseline")
+    save_snapshot(tdigest_snapshot(base, ["v"]), path)
+    d = DriftConstraint(["v"], path, threshold=0.1)
+    result = []
+    assert _jobs_run_by(spark, lambda: result.extend(d.check(base))) == 3
+    assert result[0]["status"] == "pass" and result[0]["ks"] < 0.01
+
+
 def test_ledger_resume_skips_completed(spark, tmp_path):
     from avro_conversions_spark.constraints import not_null
     from avro_conversions_spark.engine import ValidationEngine

@@ -102,6 +102,25 @@ def test_verdict_counts(result):
     assert v["sequence(conv_id,turn_idx)"][0] == "fail"
 
 
+def test_verdict_plan_has_no_join_or_global_sort(spark, fixture_df):
+    """Verdicts come from one aggregate over the input and the violations:
+    no cross join with the constraint names, no full outer join, no
+    range-partitioned global sort."""
+    eng = ValidationEngine(row_constraints=[not_null("conv_id"), enum_in("role", ROLES)])
+    res = eng.run(fixture_df, "p")
+    res.verdicts.collect()
+    plan = res.verdicts._jdf.queryExecution().executedPlan().toString()
+    for node in (
+        "BroadcastNestedLoopJoin",
+        "CartesianProduct",
+        "FullOuter",
+        "SortMergeJoin",
+        "rangepartitioning",
+    ):
+        assert node not in plan, node
+    res.unpersist()
+
+
 def test_run_is_deterministic(spark, fixture_df, result):
     eng = ValidationEngine(
         row_constraints=[not_null("conv_id"), enum_in("role", ROLES)],
