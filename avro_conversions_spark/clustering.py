@@ -34,22 +34,11 @@ has no clustering; this extends the §2.8 training-pipeline surface
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from avro_conversions_spark.functions.vectors import to_double
+from avro_conversions_spark.functions.vectors import dist2, to_double
 from avro_conversions_spark.session import persist_for_replay
-
-
-def _dist2(v: Column, c: Column) -> Column:
-    """Squared L2 distance between two double arrays — a sequential
-    left-fold (F.aggregate), so the floating-point summation order is
-    pinned left-to-right on both engines."""
-    return F.aggregate(
-        F.zip_with(v, c, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def assign_clusters(
@@ -75,7 +64,7 @@ def assign_clusters(
         F.transform(
             cent,
             lambda c, i: F.struct(
-                _dist2(F.col(vec_col), c).alias("d"),
+                dist2(F.col(vec_col), c).alias("d"),
                 i.cast("int").alias("cluster"),
             ),
         )

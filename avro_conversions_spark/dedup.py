@@ -3,10 +3,10 @@
 Scale design (100 TB of documents, 1000 executors):
 - exact: hash-groupBy on md5(text) — map-side partial agg, one shuffle of
   (hash, count) pairs, never the text itself.
-- minhash LSH: explode-to-shingles → per-(doc, seed) min-hash aggregation
-  (partial agg shrinks the shuffle to docs × seeds rows) → band keys →
-  self-join *within buckets only*. The candidate join is banded so the
-  shuffle is bucket-local; a global doc×doc cross join never exists.
+- minhash LSH: row-local signature (tokens → shingles → per-seed
+  min-hash in one projection, no shuffle) → band keys → self-join
+  *within buckets only*. The candidate join is banded so the shuffle is
+  bucket-local; a global doc×doc cross join never exists.
 - ngram Jaccard verification runs only on LSH candidates (or on small
   tables directly).
 - simhash / embedding near-dup: bucket by a short signature, verify with
@@ -23,16 +23,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from avro_conversions_spark.functions.text import fingerprint, shingles
-from avro_conversions_spark.functions.vectors import cosine, simhash_bits
+from avro_conversions_spark.functions.vectors import (
+    simhash_bits,
+    stage_vec,
+    staged_cos,
+)
 from avro_conversions_spark.session import persist_for_replay
-
-
-def md5_hash64(c: Column, seed: int) -> Column:
-    """Deterministic 32-bit hash from md5 (oracle-reproducible):
-    first 8 hex chars of md5(seed || value) as a long."""
-    return F.conv(F.substring(F.md5(F.concat(F.lit(str(seed)), c)), 1, 8), 16, 10).cast(
-        "long"
-    )
 
 
 def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -68,31 +64,51 @@ def doc_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", 
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, seed, minhash): min over shingles of H(seed, shingle)."""
-    sh = doc_shingles(df, text_col, id_col, shingle_n)
-    seeds = sh.sparkSession.range(num_hashes).withColumnRenamed("id", "seed")
-    return (
-        sh.crossJoin(F.broadcast(seeds))
-        .groupBy(id_col, "seed")
-        .agg(
-            F.min(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.col("seed").cast("string"), F.col("shingle"))), 1, 8
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-            ).alias("minhash")
-        )
-    )
+def _minhash_sig(shingles: Column, num_hashes: int, hash_fn: str) -> Column:
+    """Array of ``num_hashes`` per-seed min-hashes over a STAGED shingle
+    array column.
+
+    ``hash_fn``: 'md5' is DuckDB-reproducible — the correctness oracle
+    recomputes it bit-for-bit; 'xxhash' is the production path — xxhash64
+    is UTF8String-native (no hex-string round trip: the md5 form allocates
+    a hex string, substrings it, and string-parses it back per hash, which
+    at 24 hashes/row is allocation-bound, measured ~8x slower)."""
+    if hash_fn not in ("md5", "xxhash"):
+        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+
+    def seed_min(s: Column) -> Column:
+        if hash_fn == "xxhash":
+            return F.array_min(F.transform(shingles, lambda sh: F.xxhash64(s, sh)))
+        # md5: min over the FULL hex strings, then one substring+conv on
+        # the winner: fixed-length lowercase hex orders lexicographically
+        # exactly like its numeric value, so argmin is unchanged and the
+        # per-(shingle × seed) conv/substring of the historical form
+        # collapses to once per seed — measured 1.7 → 1.25 s at sf0.1,
+        # values bit-identical (oracle formula untouched).
+        return F.conv(
+            F.substring(
+                F.array_min(
+                    F.transform(shingles, lambda sh: F.md5(F.concat(s.cast("string"), sh)))
+                ),
+                1,
+                8,
+            ),
+            16,
+            10,
+        ).cast("long")
+
+    sig_raw = F.transform(F.sequence(F.lit(0), F.lit(num_hashes - 1)), seed_min)
+    # CollapseProject inlines a staged column referenced ONCE into its
+    # consumer — even into a higher-order-function lambda, where "once"
+    # textually means once PER OUTER ELEMENT at runtime. With the shingle
+    # array inlined into the seed transform, shingling re-ran once per
+    # seed: measured 32-44 s vs 11-13.5 s (3x) on a 4.2M-turn table at
+    # local[32], identical signatures. The size() guard adds a second
+    # reference so the optimizer keeps the projection materialized
+    # (semantically a no-op: size(null array) propagates null, and the
+    # signature of a null text is null either way). Plan shape pinned by
+    # test_minhash_plan_stages_shingles_once.
+    return F.when(F.size(shingles) >= 0, sig_raw)
 
 
 def with_minhash_signature(
@@ -106,26 +122,20 @@ def with_minhash_signature(
 ) -> DataFrame:
     """ROW-LOCAL MinHash signature: ``out_col`` = array of ``num_hashes``
     min-hashes computed entirely within each row (tokens → shingles →
-    per-seed min over md5-derived hashes) — no explode, no shuffle.
+    per-seed min over ``hash_fn`` hashes, see ``_minhash_sig``) — no
+    explode, no shuffle.
 
-    This is the 100 TB signature path: ``minhash_signatures`` (explode +
-    groupBy) shuffles docs × shingles × seeds rows, which at 10^12 turns
-    is petabytes of exchange; the row-local form is a pure projection that
+    This is the 100 TB signature path: an explode + groupBy form
+    shuffles docs × shingles × seeds rows, which at 10^12 turns is
+    petabytes of exchange; the row-local form is a pure projection that
     rides the SAME scan as everything else and emits exactly one array per
-    document. The two agree hash-for-hash (pinned by
+    document (values pinned against a pure-Python md5 reference by
     test_row_local_minhash_matches_grouped). Shuffle-free also means the
     banding/bucket join downstream can partition however it likes.
 
     Intermediate token/shingle arrays are staged as real columns — Spark
     does not CSE across lambda boundaries, so inlining them would
-    re-evaluate the tokenizer once per seed.
-
-    ``hash_fn``: 'md5' (default) is DuckDB-reproducible — the correctness
-    oracle recomputes it bit-for-bit; 'xxhash' is the production path —
-    xxhash64 is UTF8String-native (no hex-string round trip: the md5 form
-    allocates a hex string, substrings it, and string-parses it back per
-    hash, which at 24 hashes/row is allocation-bound, measured ~8x
-    slower)."""
+    re-evaluate the tokenizer once per seed."""
     from avro_conversions_spark.functions.text import shingles_from_tokens, tokens
 
     # ``tokens_col``: callers that already staged the token array (e.g. a
@@ -135,48 +145,7 @@ def with_minhash_signature(
     staged = df.withColumn("_mh_toks", toks).withColumn(
         "_mh_shingles", shingles_from_tokens(F.col("_mh_toks"), shingle_n)
     )
-    if hash_fn == "xxhash":
-        def seed_min(s: Column) -> Column:
-            return F.array_min(
-                F.transform(F.col("_mh_shingles"), lambda sh: F.xxhash64(s, sh))
-            )
-    elif hash_fn == "md5":
-        def seed_min(s: Column) -> Column:
-            # min over the FULL md5 hex strings, then one substring+conv on
-            # the winner: fixed-length lowercase hex orders lexicographically
-            # exactly like its numeric value, so argmin is unchanged and the
-            # per-(shingle × seed) conv/substring of the historical form
-            # collapses to once per seed — measured 1.7 → 1.25 s at sf0.1,
-            # values bit-identical (oracle formula untouched).
-            return F.conv(
-                F.substring(
-                    F.array_min(
-                        F.transform(
-                            F.col("_mh_shingles"),
-                            lambda sh: F.md5(F.concat(s.cast("string"), sh)),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    sig_raw = F.transform(seeds, seed_min)
-    # CollapseProject inlines a staged column referenced ONCE into its
-    # consumer — even into a higher-order-function lambda, where "once"
-    # textually means once PER OUTER ELEMENT at runtime. With the shingle
-    # array inlined into the seed transform, shingling re-ran once per
-    # seed: measured 32-44 s vs 11-13.5 s (3x) on a 4.2M-turn table at
-    # local[32], identical signatures. The size() guard adds a second
-    # reference so the optimizer keeps the projection materialized
-    # (semantically a no-op: size(null array) propagates null, and the
-    # signature of a null text is null either way). Plan shape pinned by
-    # test_minhash_plan_stages_shingles_once.
-    sig = F.when(F.size(F.col("_mh_shingles")) >= 0, sig_raw)
+    sig = _minhash_sig(F.col("_mh_shingles"), num_hashes, hash_fn)
     return staged.withColumn(out_col, sig).drop("_mh_toks", "_mh_shingles")
 
 
@@ -195,11 +164,9 @@ def minhash_band_keys(
     exchange — and each band key is a slice of that array. Zero shuffles:
     projection + one posexplode of ``ceil(num_hashes / band_size)`` short
     rows per document (plan pinned by
-    test_lsh_candidates_band_from_rowlocal_sig). Values are
-    hash-identical to the historical grouped-explode path
-    (``minhash_signatures`` + collect_list banding), pinned by
-    test_row_local_minhash_matches_grouped and the parity half of the
-    band test, so downstream candidates are bit-for-bit unchanged."""
+    test_lsh_candidates_band_from_rowlocal_sig). Candidate pairs equal a
+    pure-Python md5 signature + banding reference, pinned by the parity
+    half of that test."""
     sig = with_minhash_signature(
         df.select(F.col(id_col), F.col(text_col)),
         text_col,
@@ -422,24 +389,17 @@ def embedding_near_duplicates(
     member is scored against the keeper) while dropping only redundant
     member-member edges. Star rows carry ``bucket_capped = true`` so the
     truncation is visible, never silent."""
-    from avro_conversions_spark.functions.vectors import dot_double, to_double
-
     b = simhash_buckets(df, vec_col, id_col, bits)
     sizes = b.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("_n"), F.min(id_col).alias("_rep")
     )
     b = b.join(sizes, "bucket")
     # stage double vector + L2 norm ONCE PER ROW before the pair joins:
-    # each within-bucket pair then costs a single dot fold instead of
-    # dot + two norm folds + per-pair to_double allocations. Bit-identical
+    # each within-bucket pair then costs a single dot fold. Bit-identical
     # to cosine(va, vb) — same float ops, hoisted below the join.
-    vecs = df.select(
-        F.col(id_col), to_double(F.col(vec_col)).alias("_dv")
-    ).withColumn("_nn", F.sqrt(dot_double(F.col("_dv"), F.col("_dv"))))
-
-    def staged_cos(va: str, na: str, vb: str, nb: str) -> Column:
-        denom = F.col(na) * F.col(nb)
-        return F.when(denom > 0, dot_double(F.col(va), F.col(vb)) / denom)
+    vecs = stage_vec(
+        df.select(F.col(id_col), F.col(vec_col).alias("_dv")), "_dv", "_dv", "_nn"
+    )
 
     small = b.where(F.col("_n") <= max_bucket)
     a_side = small.join(vecs, id_col).select(
@@ -460,7 +420,9 @@ def embedding_near_duplicates(
         .select(
             "id_a",
             "id_b",
-            F.round(staged_cos("va", "na", "vb", "nb"), 4).alias("cos"),
+            F.round(
+                staged_cos(F.col("va"), F.col("na"), F.col("vb"), F.col("nb")), 4
+            ).alias("cos"),
             F.lit(False).alias("bucket_capped"),
         )
     )
@@ -478,7 +440,9 @@ def embedding_near_duplicates(
         .select(
             F.col("_rep").alias("id_a"),
             F.col(id_col).alias("id_b"),
-            F.round(staged_cos("va", "na", "_dv", "_nn"), 4).alias("cos"),
+            F.round(
+                staged_cos(F.col("va"), F.col("na"), F.col("_dv"), F.col("_nn")), 4
+            ).alias("cos"),
             F.lit(True).alias("bucket_capped"),
         )
     )
@@ -518,33 +482,6 @@ def paragraph_minhash_clusters(
 
     from avro_conversions_spark.functions.text import shingles_from_tokens, tokens
 
-    if hash_fn == "xxhash":
-        def seed_min(s: Column) -> Column:
-            return F.array_min(
-                F.transform(F.col("_psh"), lambda sh: F.xxhash64(s, sh))
-            )
-    elif hash_fn == "md5":
-        def seed_min(s: Column) -> Column:
-            # same conv-hoist as with_minhash_signature: lexicographic min of
-            # full fixed-length hex == numeric min, so substring+conv run once
-            # per seed instead of per shingle×seed — values bit-identical
-            return F.conv(
-                F.substring(
-                    F.array_min(
-                        F.transform(
-                            F.col("_psh"),
-                            lambda sh: F.md5(F.concat(s.cast("string"), sh)),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-
     toks = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
     n_paras = F.greatest(
         F.ceil(F.size("_toks") / F.lit(para_tokens)).cast("int"), F.lit(1)
@@ -558,12 +495,11 @@ def paragraph_minhash_clusters(
             )
         ).alias("para_idx", "_ptoks"),
     )
-    # stage the shingle array as a real column and keep the size() guard —
-    # same CollapseProject re-evaluation trap as with_minhash_signature
-    # (plan pinned there by test_minhash_plan_stages_shingles_once)
+    # stage the shingle array as a real column: _minhash_sig's size()
+    # guard keeps it materialized (plan pinned by
+    # test_minhash_plan_stages_shingles_once)
     staged = paras.withColumn("_psh", shingles_from_tokens(F.col("_ptoks"), shingle_n))
-    sig_raw = F.transform(F.sequence(F.lit(0), F.lit(num_hashes - 1)), seed_min)
-    sig = F.when(F.size(F.col("_psh")) >= 0, sig_raw)
+    sig = _minhash_sig(F.col("_psh"), num_hashes, hash_fn)
     clustered = staged.select(
         F.col(id_col),
         "para_idx",

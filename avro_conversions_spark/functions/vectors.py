@@ -7,7 +7,7 @@ explicit cast so results are reproducible against the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -15,25 +15,66 @@ def to_double(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
 
 
-def dot(a: Column, b: Column) -> Column:
+def dot_double(a: Column, b: Column) -> Column:
+    """Dot product of two array<double> columns — the one multiply-add
+    fold. Callers that already hold double arrays (staged by
+    ``stage_vec``) skip ``dot``'s per-element cast: each ``to_double``
+    allocates a fresh array per evaluation, which matters in pair-join
+    hot paths where a dot runs once per candidate pair."""
     return F.aggregate(
-        F.zip_with(to_double(a), to_double(b), lambda x, y: x * y),
+        F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+
+
+def dot(a: Column, b: Column) -> Column:
+    return dot_double(to_double(a), to_double(b))
 
 
 def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
+def dist2(a: Column, b: Column) -> Column:
+    """Squared L2 distance between two double arrays — a sequential
+    left-fold (F.aggregate), so the floating-point summation order is
+    pinned left-to-right on both engines."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def stage_vec(df: DataFrame, vec_col: str, v_out: str, n_out: str) -> DataFrame:
+    """Stage (double vector, its L2 norm) as real columns ``v_out`` and
+    ``n_out`` (``v_out`` may be ``vec_col`` itself: cast in place). The
+    vector is referenced ≥2× downstream, so CollapseProject keeps the
+    projection materialized, and a pair join after it pays one
+    ``staged_cos`` dot fold per pair instead of dot + two norms + six
+    per-pair array casts."""
+    return df.withColumn(v_out, to_double(F.col(vec_col))).withColumn(
+        n_out, F.sqrt(dot_double(F.col(v_out), F.col(v_out)))
+    )
+
+
+def staged_cos(va: Column, na: Column, vb: Column, nb: Column) -> Column:
+    """Cosine of double vectors ``va``/``vb`` given their norms ``na``/``nb``.
+    NULL for undefined similarity (either side NULL, ragged, or all-zero):
+    a NULL norm or dot propagates, and a zero denominator yields NULL
+    instead of an ANSI DIVIDE_BY_ZERO — one zero vector (a failed
+    embedding, realistic at corpus scale) must not crash every
+    cosine-scoring job (round-5 adversarial sweep)."""
+    denom = na * nb
+    return F.when(denom > 0, dot_double(va, vb) / denom)
+
+
 def cosine(a: Column, b: Column) -> Column:
-    """NULL for undefined similarity (either side NULL, ragged, or
-    all-zero): the bare division was an ANSI DIVIDE_BY_ZERO that let ONE
-    zero vector (a failed embedding — realistic at corpus scale) crash
-    every cosine-scoring job (round-5 adversarial sweep)."""
-    denom = norm(a) * norm(b)
-    return F.when(denom > 0, dot(a, b) / denom)
+    """``staged_cos`` with the cast and norms computed inline — the same
+    float ops in the same order, so scores are bit-identical to staging
+    each side first with ``stage_vec``."""
+    return staged_cos(to_double(a), norm(a), to_double(b), norm(b))
 
 
 def simhash_bits(v: Column, bits: int = 16) -> Column:
@@ -54,18 +95,6 @@ def simhash_bits(v: Column, bits: int = 16) -> Column:
         lambda acc, x: acc + x,
     )
     return F.when(F.size(v) >= bits, packed)
-
-
-def dot_double(a: Column, b: Column) -> Column:
-    """``dot`` for columns that are ALREADY array<double> — skips the
-    defensive per-element cast (each ``to_double`` allocates a fresh
-    array per evaluation, which matters in pair-join hot paths where a
-    dot runs once per candidate pair)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def const_double_array(values) -> Column:

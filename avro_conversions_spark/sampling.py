@@ -8,7 +8,7 @@ a stable hash of the document id, so membership is a pure function of the
 row. Everything here is expression-only (whole-stage codegen, no UDFs,
 no shuffles for the assignment itself) and md5-derived so the DuckDB
 oracle reproduces every assignment bit-for-bit (swap to xxhash64 for
-production throughput, same pattern as dedup.md5_hash64).
+production throughput, same pattern as dedup's ``hash_fn``).
 """
 
 from __future__ import annotations

@@ -17,29 +17,13 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from avro_conversions_spark.functions.vectors import dot_double, to_double
-
-
-def _staged_cos(a_vec: str, a_norm: str, b_vec: str, b_norm: str) -> Column:
-    """Cosine over per-side PRE-STAGED double vectors and norms: each
-    side's cast + norm fold is computed once per ROW before the pair
-    join, so a pair costs one dot fold instead of dot + two norms + six
-    per-pair to_double array allocations. Bit-identical to
-    ``cosine(a, b)``: norm/sqrt/dot evaluate the same float ops in the
-    same order, only hoisted below the join; NULL/ragged/zero-vector
-    algebra is unchanged (NULL norm or NULL dot propagates, zero denom →
-    NULL)."""
-    denom = F.col(a_norm) * F.col(b_norm)
-    return F.when(denom > 0, dot_double(F.col(a_vec), F.col(b_vec)) / denom)
-
-
-def _with_vec_norm(df: DataFrame, vec_col: str, v_out: str, n_out: str) -> DataFrame:
-    """Stage (double vector, its L2 norm) as real columns — referenced
-    ≥2× downstream, so CollapseProject keeps the projection
-    materialized (the round-4 staging discipline)."""
-    return df.withColumn(v_out, to_double(F.col(vec_col))).withColumn(
-        n_out, F.sqrt(dot_double(F.col(v_out), F.col(v_out)))
-    )
+from avro_conversions_spark.functions.vectors import (
+    dist2,
+    dot_double,
+    stage_vec,
+    staged_cos,
+    to_double,
+)
 
 
 def brute_force_topk(
@@ -51,21 +35,23 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k neighbors per query: (qid, rank, nid, cos).
     Deterministic tie-break on neighbor id."""
-    q = _with_vec_norm(
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")),
-        "qvec", "_qv", "_qn",
-    ).select("qid", "_qv", "_qn")
-    c = _with_vec_norm(
-        corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec")),
-        "nvec", "_nv", "_nn",
-    ).select("nid", "_nv", "_nn")
+    q = stage_vec(
+        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("_qv")),
+        "_qv", "_qv", "_qn",
+    )
+    c = stage_vec(
+        corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("_nv")),
+        "_nv", "_nv", "_nn",
+    )
     scored = (
         c.crossJoin(F.broadcast(q))
         .where(F.col("qid") != F.col("nid"))
         .select(
             "qid",
             "nid",
-            F.round(_staged_cos("_qv", "_qn", "_nv", "_nn"), 6).alias("cos"),
+            F.round(
+                staged_cos(F.col("_qv"), F.col("_qn"), F.col("_nv"), F.col("_nn")), 6
+            ).alias("cos"),
         )
     )
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
@@ -163,7 +149,7 @@ def ivf_topk(
     queries = queries.where(
         F.col(vec_col).isNotNull() & (F.size(vec_col) == head["d"])
     )
-    c_feat = _with_vec_norm(
+    c_feat = stage_vec(
         corpus.select(
             F.col(id_col).alias("nid"),
             F.col(vec_col).alias("nvec"),
@@ -189,17 +175,10 @@ def ivf_topk(
     from avro_conversions_spark.functions.vectors import const_double_matrix
 
     cent_arr = const_double_matrix(centers)
-
-    def dist2(q: Column, c: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(q, c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    q_feat = queries.select(
-        F.col(id_col).alias("qid"), to_double(F.col(vec_col)).alias("qvec")
-    ).withColumn("_qn", F.sqrt(dot_double(F.col("qvec"), F.col("qvec"))))
+    q_feat = stage_vec(
+        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")),
+        "qvec", "qvec", "_qn",
+    )
     ranked_cells = F.slice(
         F.array_sort(
             F.transform(
@@ -220,7 +199,11 @@ def ivf_topk(
         assigned.join(F.broadcast(probes), "cell")
         .where(F.col("qid") != F.col("nid"))
         .select(
-            "qid", "nid", F.round(_staged_cos("qvec", "_qn", "_nv", "_nn"), 6).alias("cos")
+            "qid",
+            "nid",
+            F.round(
+                staged_cos(F.col("qvec"), F.col("_qn"), F.col("_nv"), F.col("_nn")), 6
+            ).alias("cos"),
         )
     )
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
@@ -247,19 +230,19 @@ def lsh_topk(
     brute-force result with high recall at a fraction of the comparisons."""
     n_bands = n_planes // band_size
     # stage double vector + norm per ROW before banding: the cosine after
-    # the candidate join then costs one dot fold per pair (see _staged_cos)
+    # the candidate join then costs one dot fold per pair (see stage_vec)
     c_sig = lsh_signature(
-        _with_vec_norm(
-            corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec")),
-            "nvec", "_nv", "_nn",
-        ).select("nid", "_nv", "_nn"),
+        stage_vec(
+            corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("_nv")),
+            "_nv", "_nv", "_nn",
+        ),
         "_nv", dim, n_planes, seed,
     )
     q_sig = lsh_signature(
-        _with_vec_norm(
-            queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")),
-            "qvec", "_qv", "_qn",
-        ).select("qid", "_qv", "_qn"),
+        stage_vec(
+            queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("_qv")),
+            "_qv", "_qv", "_qn",
+        ),
         "_qv", dim, n_planes, seed,
     )
 
@@ -285,7 +268,11 @@ def lsh_topk(
         .dropDuplicates(["qid", "nid"])
     )
     scored = cand.select(
-        "qid", "nid", F.round(_staged_cos("_qv", "_qn", "_nv", "_nn"), 6).alias("cos")
+        "qid",
+        "nid",
+        F.round(
+            staged_cos(F.col("_qv"), F.col("_qn"), F.col("_nv"), F.col("_nn")), 6
+        ).alias("cos"),
     )
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
     return (

@@ -8,7 +8,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from avro_conversions_spark import clustering, similarity
-from avro_conversions_spark.functions.vectors import cosine, simhash_bits
+from avro_conversions_spark.functions.vectors import (
+    cosine,
+    dist2,
+    simhash_bits,
+    stage_vec,
+    staged_cos,
+)
 
 
 def _adv(spark):
@@ -35,6 +41,25 @@ def test_cosine_null_for_zero_and_null_vectors(spark):
     assert got[(0, 4)] is None and got[(4, 4)] is None  # zero norm
     assert got[(0, 2)] is None  # NULL side
     assert got[(0, 1)] is not None and got[(0, 1)] > 0.99
+
+    # the staged kernels (each side cast + normed once, then staged_cos)
+    # give cosine's exact value on every pair, NULL included
+    a = stage_vec(df, "embedding", "va", "na").select(
+        F.col("vec_id").alias("ia"), "va", "na"
+    )
+    b = stage_vec(df, "embedding", "vb", "nb").select(
+        F.col("vec_id").alias("ib"), "vb", "nb"
+    )
+    staged = a.crossJoin(b).select(
+        "ia",
+        "ib",
+        staged_cos(F.col("va"), F.col("na"), F.col("vb"), F.col("nb")).alias("c"),
+        dist2(F.col("va"), F.col("vb")).alias("d2"),
+    ).collect()
+    assert {(r["ia"], r["ib"]): r["c"] for r in staged} == got
+    d2 = {(r["ia"], r["ib"]): r["d2"] for r in staged}
+    assert d2[(0, 2)] is None and d2[(2, 0)] is None  # NULL side
+    assert d2[(0, 0)] == 0.0 and d2[(4, 4)] == 0.0  # identical vectors
 
 
 def test_simhash_null_for_short_or_null_vectors(spark):

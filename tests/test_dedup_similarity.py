@@ -185,14 +185,18 @@ def test_ivf_ann_recall_vs_bruteforce(spark):
 
 def test_row_local_minhash_matches_grouped(spark):
     """The shuffle-free row-local signature must agree hash-for-hash with
-    the explode+groupBy minhash_signatures path (same md5 formula)."""
+    a pure-Python grouped reference over the exploded shingle rows: the
+    min over shingles of the first 8 hex digits of md5(seed || shingle)."""
+    from hashlib import md5
+
     import avro_conversions_spark.dedup as dedup
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
-    grouped = {
-        (r.doc_id, r.seed): r.minhash
-        for r in dedup.minhash_signatures(docs, num_hashes=4).collect()
-    }
+    grouped = {}
+    for r in dedup.doc_shingles(docs).collect():
+        for seed in range(4):
+            h = int(md5(f"{seed}{r.shingle}".encode()).hexdigest()[:8], 16)
+            grouped[(r.doc_id, seed)] = min(grouped.get((r.doc_id, seed), h), h)
     rowlocal = {
         (r.doc_id, s): v
         for r in dedup.with_minhash_signature(docs, num_hashes=4).collect()

@@ -41,27 +41,24 @@ def test_lsh_candidates_band_from_rowlocal_sig(spark):
     assert "LogicalRDD" in plan
     assert "parquet" not in plan
 
-    # value parity with the pre-round-6 grouped-explode banding
-    sig = dedup.minhash_signatures(docs, num_hashes=8)
-    banded = (
-        sig.withColumn("band", (F.col("seed") / 2).cast("int"))
-        .groupBy("doc_id", "band")
-        .agg(
-            F.concat_ws("_", F.sort_array(F.collect_list("minhash"))).alias(
-                "band_key"
-            )
-        )
-    )
-    a = banded.select(F.col("doc_id").alias("id_a"), "band", "band_key")
-    b = banded.select(F.col("doc_id").alias("id_b"), "band", "band_key")
-    legacy = (
-        a.join(b, ["band", "band_key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates()
-    )
+    # value parity with a pure-Python reference of the pre-round-6
+    # grouped-explode banding: per-(doc, seed) md5 min-hash over the
+    # exploded shingles, bands of two seeds keyed by their sorted values
+    from collections import defaultdict
+    from hashlib import md5
+
+    sig = {}
+    for r in dedup.doc_shingles(docs).collect():
+        for seed in range(8):
+            h = int(md5(f"{seed}{r.shingle}".encode()).hexdigest()[:8], 16)
+            sig[(r.doc_id, seed)] = min(sig.get((r.doc_id, seed), h), h)
+    buckets = defaultdict(set)
+    for (doc_id, seed), h in sig.items():
+        if seed % 2 == 0:
+            band_key = "_".join(map(str, sorted((h, sig[(doc_id, seed + 1)]))))
+            buckets[(seed // 2, band_key)].add(doc_id)
     got = {(r.id_a, r.id_b) for r in new.collect()}
-    want = {(r.id_a, r.id_b) for r in legacy.collect()}
+    want = {(a, b) for ids in buckets.values() for a in ids for b in ids if a < b}
     assert got == want and want  # non-trivial candidate set
 
 

@@ -10,6 +10,9 @@ PLANTED boilerplate.
 
 from __future__ import annotations
 
+from hashlib import md5
+
+import pytest
 from pyspark.sql import functions as F
 
 BOILER = "this transcript is provided under license terms " * 3  # 24 tokens
@@ -65,6 +68,25 @@ def test_short_and_empty_documents_survive(spark):
     assert by_doc[0].cluster == by_doc[1].cluster
     assert by_doc[0].is_boilerplate and by_doc[1].is_boilerplate
     assert not by_doc[2].is_boilerplate
+
+
+@pytest.mark.parametrize("hash_fn", ["md5", "xxhash"])
+def test_paragraph_cluster_is_md5_of_document_signature(spark, hash_fn):
+    """Paragraph and document signatures share one MinHash kernel: a
+    document of at most ``para_tokens`` tokens is a single paragraph whose
+    ``cluster`` is md5 of its document-level signature joined by '_'."""
+    from avro_conversions_spark.dedup import (
+        paragraph_minhash_clusters,
+        with_minhash_signature,
+    )
+
+    df = spark.createDataFrame([(0, UNIQUE[1])], "doc_id long, text string")
+    (para,) = paragraph_minhash_clusters(df, hash_fn=hash_fn).collect()
+    (doc,) = with_minhash_signature(
+        df, num_hashes=4, shingle_n=2, hash_fn=hash_fn
+    ).collect()
+    assert para.para_idx == 0
+    assert para.cluster == md5("_".join(map(str, doc.minhash_sig)).encode()).hexdigest()
 
 
 def test_no_allpairs_join_in_plan(spark):
