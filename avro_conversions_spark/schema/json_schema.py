@@ -81,6 +81,13 @@ _NAME_FROM_ANY_ID = re.compile(rf".*/({_IDENT})$")
 # --------------------------------------------------------------------- range
 
 
+def signed_bit_length(d: Decimal) -> int:
+    """BigInteger.bitLength() of the integer part, plus the sign bit. The
+    length is two's complement, so -2**31 takes 32 bits like 2**31-1."""
+    n = int(d.to_integral_value(rounding=ROUND_DOWN))
+    return (n if n >= 0 else ~n).bit_length() + 1
+
+
 @dataclass(frozen=True)
 class NumberRange:
     """Decimal range with optional (open) bounds — util/DecimalRange.java."""
@@ -141,12 +148,8 @@ class NumberRange:
 
     def integer_bit_size(self) -> int:
         """Bits to represent the integer bounds, or 0 if unbounded
-        (DecimalRange.java:177-185: max bitLength + sign bit)."""
-        bits = -1
-        for b in (self.lo, self.hi):
-            if b is not None:
-                bits = max(bits, abs(int(b.to_integral_value(rounding=ROUND_DOWN))).bit_length())
-        return bits + 1
+        (DecimalRange.java:177-185)."""
+        return max((signed_bit_length(b) for b in (self.lo, self.hi) if b is not None), default=0)
 
     def required_scale(self) -> int:
         return max((self._scale(b) for b in (self.lo, self.hi) if b is not None), default=0)
@@ -284,7 +287,8 @@ def _jstr(v) -> str:
     if isinstance(v, str):
         return v
     if isinstance(v, (list, dict)):
-        return json.dumps(v, separators=(", ", "="))
+        # numbers inside parse as Decimal; render them as JSON floats
+        return json.dumps(v, separators=(", ", "="), default=float)
     return str(v)
 
 
@@ -472,18 +476,26 @@ class _Analyzer:
 
 def load_json_schema(source: str | dict) -> SchemaProps:
     """Load + analyse a JSON Schema document (dict, JSON text, or file
-    path). Reference entry point: SchemaAnalyzer.parseJsonProperties."""
+    path). Reference entry point: SchemaAnalyzer.parseJsonProperties.
+
+    JSON text and files parse fractions as ``Decimal``, so a bound keeps
+    every digit it is written with (util/DecimalRange.java uses
+    BigDecimal): ``99999999999.999999`` stays decimal(17,6) instead of
+    rounding to the integral float ``100000000000.0``. A dict caller has
+    already parsed its numbers; to keep fractional bounds exact, build the
+    dict with ``json.loads(text, parse_float=Decimal)``. Integer bounds are
+    exact either way (``benchmark/inputs.TURN_SCHEMA`` has only those)."""
     if isinstance(source, str):
         s = source.strip()
         if s.startswith("{"):
             try:
-                source = json.loads(s)
+                source = json.loads(s, parse_float=Decimal)
             except json.JSONDecodeError as e:
                 raise AnalysisFailure("Failed to load the JSON schema") from e
         else:
             try:
                 with open(source, encoding="utf-8") as fh:
-                    source = json.load(fh)
+                    source = json.load(fh, parse_float=Decimal)
             except (OSError, json.JSONDecodeError) as e:
                 raise AnalysisFailure("Failed to load the JSON schema") from e
     if not isinstance(source, dict):

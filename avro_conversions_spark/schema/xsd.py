@@ -35,6 +35,7 @@ from xml.etree import ElementTree as ET
 
 from pyspark.sql import types as T
 
+from avro_conversions_spark.schema.json_schema import signed_bit_length
 from avro_conversions_spark.schema.model import (
     ArrayType,
     DecimalType,
@@ -231,10 +232,7 @@ def _elect_decimal(facets: dict) -> object:
             return XScalar("double")  # scale without precision -> double
         return XDecimal(2**31 - 1, digits, frac)
     sized = bounds + ([max_digits, -max_digits] if max_digits is not None else [])
-    bits = max(
-        (int(abs(b).to_integral_value(rounding="ROUND_DOWN")).bit_length() + 1 for b in sized),
-        default=64,
-    )
+    bits = max((signed_bit_length(b) for b in sized), default=64)
     if bits <= 32:
         return INT_TYPE
     if bits <= 64:

@@ -1,11 +1,14 @@
 """Port of the reference's SchemaAnalyzerTest (json/SchemaAnalyzerTest.java:
 21-150) — JSON-Schema walk, draft-version keyword gating, the
 INTERSECT/UNION lattice, and the Avro-type election, asserted structurally
-against the reference's own fixture files."""
+against the fixtures in tests/fixtures/json/. Each fixture writes out the
+case its test names (FIXTURES.md §6); TestRecordAll.avsc is the election
+FIXTURES.md §3 and SURVEY I4 prescribe."""
 
 from __future__ import annotations
 
 from decimal import Decimal
+from pathlib import Path
 
 import pytest
 
@@ -24,7 +27,7 @@ from avro_conversions_spark.schema import (
     to_write_type,
 )
 
-FIXTURES = "/root/reference/src/test/resources/opwvhk/avro/json"
+FIXTURES = Path(__file__).parent / "fixtures" / "json"
 
 
 def load(name: str):
@@ -117,8 +120,8 @@ def test_invalid_and_null_schemas():
 
 
 def test_avro_election_matches_reference_fixture():
-    """TestRecord.schema.json -> Avro, vs the reference's expected
-    TestRecordAll.avsc (SchemaAnalyzerTest.java:142-148), structurally."""
+    """TestRecord.schema.json -> Avro, vs the expected TestRecordAll.avsc
+    (SchemaAnalyzerTest.java:142-148), structurally."""
     rt, nullable = infer_read_schema(load("TestRecord.schema.json"))
     exp, _ = from_avsc(open(f"{FIXTURES}/TestRecordAll.avsc").read())
     assert isinstance(rt, RecordType) and rt.name == "TestCase"
@@ -207,3 +210,50 @@ def test_write_type_from_json_schema():
     assert f["when"].format == "date-time"
     assert f["payload"].content_encoding == "base64"
     assert isinstance(f["score"].dtype, T.FloatType)
+
+
+def test_fractional_bounds_keep_every_digit():
+    """Schema text parses fractions as Decimal: the bounds
+    ±99999999999.999999 elect decimal(17,6) (util/DecimalRange.java), not
+    the long that the float 100000000000.0 would give, and the write type
+    resolves against a read decimal(17,6). Number lists in a default still
+    render as JSON."""
+    from pyspark.sql import types as T
+
+    from avro_conversions_spark.schema import SchemaResolver
+
+    text = """
+    {"$schema": "http://json-schema.org/draft-07/schema#",
+     "title": "Amounts", "type": "object", "required": ["fixedPoint"],
+     "properties": {
+       "fixedPoint": {"type": "number",
+                      "minimum": -99999999999.999999, "maximum": 99999999999.999999},
+       "weights": {"type": "array", "items": {"type": "number"}, "default": [1.5, 2]}
+     }}"""
+    wt = to_write_type(text)
+    assert wt.fields["fixedPoint"].dtype == T.DecimalType(17, 6)
+    read, _ = from_avsc(
+        '{"type":"record","name":"Amounts","fields":[{"name":"fixedPoint","type":'
+        '{"type":"bytes","logicalType":"decimal","precision":17,"scale":6}}]}'
+    )
+    plans = SchemaResolver().resolve_record(wt, read)
+    assert [p.source for p in plans] == ["fixedPoint"]
+    assert plans[0].converter.spark_type == T.DecimalType(17, 6)
+    assert load_json_schema(text).properties["weights"].default == "[1.5, 2]"
+
+
+def test_integer_bit_size_counts_twos_complement():
+    """DecimalRange.java:177-185 takes BigInteger.bitLength(), a two's-
+    complement length: the int range [-2**31, 2**31-1] needs 32 bits and
+    elects int, the long range 64 bits and elects long."""
+    def bits(lo: int, hi: int) -> int:
+        return NumberRange(Decimal(lo), True, Decimal(hi), True).integer_bit_size()
+
+    assert bits(-(2**31), 2**31 - 1) == 32
+    assert bits(-(2**31) - 1, 0) == 33
+    assert bits(-(2**63), 2**63 - 1) == 64
+    rt, _ = infer_read_schema(
+        '{"title": "R", "type": "object", "required": ["i"], "properties": '
+        '{"i": {"type": "integer", "minimum": -2147483648, "maximum": 2147483647}}}'
+    )
+    assert rt.fields[0].type == PrimitiveType("int")

@@ -1,9 +1,12 @@
 """Port of the reference's XsdAnalyzerTest (xml/XsdAnalyzerTest.java:76-300)
-against its own fixture XSDs — groups/cardinality, attributes, simple and
-complex content, mixed/any coercion, decimal facet elections, defaults,
-recursion. Closes SURVEY I5-I8 (previously n/a)."""
+against the fixture XSDs in tests/fixtures/xml/ — groups/cardinality,
+attributes, simple and complex content, mixed/any coercion, decimal facet
+elections, defaults, recursion. Each fixture writes out the case its test
+names (FIXTURES.md §6). Closes SURVEY I5-I8 (previously n/a)."""
 
 from __future__ import annotations
+
+from pathlib import Path
 
 import pytest
 
@@ -19,7 +22,7 @@ from avro_conversions_spark.schema.xsd import (
     xsd_to_write_type,
 )
 
-FIXTURES = "/root/reference/src/test/resources/opwvhk/avro/xml"
+FIXTURES = Path(__file__).parent / "fixtures" / "xml"
 
 
 @pytest.fixture(scope="module")
@@ -146,7 +149,7 @@ def test_recursion(analyzer):
 
 
 def test_resolving_test_xsd_scalar_elections():
-    """Decimal facet math on the reference's resolvingTest.xsd
+    """Decimal facet math on resolvingTest.xsd
     (TypeBuildingVisitor.java:198-240)."""
     a = XsdAnalyzer(f"{FIXTURES}/resolvingTest.xsd")
     t = a.type_of("outer")
@@ -198,8 +201,8 @@ def test_write_and_read_type_conversion():
 
 def test_xsd_write_schema_resolves_against_reference_avsc():
     """The XmlAsAvroParser constructor path (xml/XmlAsAvroParser.java:88-142):
-    write schema from resolvingTest.xsd resolves against the reference's own
-    read schema resolvingTest.avsc — aliases, enum-with-default, lossy
+    write schema from resolvingTest.xsd resolves against the read schema
+    resolvingTest.avsc — aliases, enum-with-default, lossy
     decimal->float, wrapped-array unwrap, binary encodings, logical types."""
     from avro_conversions_spark.schema import SchemaResolver, from_avsc
 
