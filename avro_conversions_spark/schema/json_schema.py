@@ -287,9 +287,19 @@ def _jstr(v) -> str:
     if isinstance(v, str):
         return v
     if isinstance(v, (list, dict)):
-        # numbers inside parse as Decimal; render them as JSON floats
-        return json.dumps(v, separators=(", ", "="), default=float)
+        return _json_text(v)
     return str(v)
+
+
+def _json_text(v) -> str:
+    """JSON text of a list or dict default/const, keys joined by ``=``;
+    a ``Decimal`` renders as written, so nested numbers keep every digit
+    just as a scalar one does."""
+    if isinstance(v, list):
+        return "[" + ", ".join(map(_json_text, v)) + "]"
+    if isinstance(v, dict):
+        return "{" + ", ".join(f"{json.dumps(k)}={_json_text(x)}" for k, x in v.items()) + "}"
+    return str(v) if isinstance(v, Decimal) else json.dumps(v)
 
 
 def _dec(v) -> Decimal | None:
@@ -361,7 +371,8 @@ class _Analyzer:
                 raise AnalysisFailure(f"unknown JSON-Schema type(s) {sorted(bad)!r}")
             props.types = types
 
-        props.inferred_title = self._infer_title(pointer, node.get("$ref"))
+        # a $ref beside other keywords names the type they refine
+        props.inferred_title = self._infer_title(node.get("$ref"), pointer)
         props.title = node.get("title")
         props.description = node.get("description")
         if "default" in node and node["default"] is not None:

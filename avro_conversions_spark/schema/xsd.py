@@ -399,7 +399,7 @@ class XsdAnalyzer:
                 xtype = self._scalar_from_simple(st, class_name=name)
             else:
                 xtype = XScalar("string")  # untyped element: raw text
-        default = el.get("default")
+        default = el.get("default", el.get("fixed"))
         if default is not None and isinstance(xtype, (XScalar, XDecimal, XEnum)):
             default = self._parse_default(xtype, default)
         else:
@@ -583,7 +583,8 @@ class XsdAnalyzer:
                     if st is not None
                     else XScalar("string")
                 )
-            default = a.get("default")
+            # a fixed value is the only one the attribute takes: it is the default
+            default = a.get("default", a.get("fixed"))
             if default is not None:
                 default = self._parse_default(xtype, default)
             out.append(XField(a.get("name"), card, xtype, _doc(a), default))

@@ -182,6 +182,10 @@ def test_number_range_lattice_open_bounds():
     assert a.restrict_to(b).required_precision() == 3
     assert a.restrict_to(b).required_scale() == 1
     assert NumberRange().integer_bit_size() == 0
+    # BigInteger.bitLength() is a two's-complement length (DecimalRange.java:177-185)
+    assert NumberRange(Decimal(-(2**31)), True, Decimal(2**31 - 1), True).integer_bit_size() == 32
+    assert NumberRange(Decimal(-(2**31) - 1), True, Decimal(0), True).integer_bit_size() == 33
+    assert NumberRange(Decimal(-(2**63)), True, Decimal(2**63 - 1), True).integer_bit_size() == 64
 
 
 def test_write_type_from_json_schema():
@@ -216,8 +220,8 @@ def test_fractional_bounds_keep_every_digit():
     """Schema text parses fractions as Decimal: the bounds
     ±99999999999.999999 elect decimal(17,6) (util/DecimalRange.java), not
     the long that the float 100000000000.0 would give, and the write type
-    resolves against a read decimal(17,6). Number lists in a default still
-    render as JSON."""
+    resolves against a read decimal(17,6). Numbers in a list or dict default
+    render as written."""
     from pyspark.sql import types as T
 
     from avro_conversions_spark.schema import SchemaResolver
@@ -228,7 +232,9 @@ def test_fractional_bounds_keep_every_digit():
      "properties": {
        "fixedPoint": {"type": "number",
                       "minimum": -99999999999.999999, "maximum": 99999999999.999999},
-       "weights": {"type": "array", "items": {"type": "number"}, "default": [1.5, 2]}
+       "weights": {"type": "array", "items": {"type": "number"}, "default": [1.5, 2]},
+       "limits": {"type": "array", "items": {"type": "number"},
+                  "default": [{"hi": 99999999999.999999}]}
      }}"""
     wt = to_write_type(text)
     assert wt.fields["fixedPoint"].dtype == T.DecimalType(17, 6)
@@ -239,21 +245,7 @@ def test_fractional_bounds_keep_every_digit():
     plans = SchemaResolver().resolve_record(wt, read)
     assert [p.source for p in plans] == ["fixedPoint"]
     assert plans[0].converter.spark_type == T.DecimalType(17, 6)
-    assert load_json_schema(text).properties["weights"].default == "[1.5, 2]"
+    props = load_json_schema(text).properties
+    assert props["weights"].default == "[1.5, 2]"
+    assert props["limits"].default == '[{"hi"=99999999999.999999}]'
 
-
-def test_integer_bit_size_counts_twos_complement():
-    """DecimalRange.java:177-185 takes BigInteger.bitLength(), a two's-
-    complement length: the int range [-2**31, 2**31-1] needs 32 bits and
-    elects int, the long range 64 bits and elects long."""
-    def bits(lo: int, hi: int) -> int:
-        return NumberRange(Decimal(lo), True, Decimal(hi), True).integer_bit_size()
-
-    assert bits(-(2**31), 2**31 - 1) == 32
-    assert bits(-(2**31) - 1, 0) == 33
-    assert bits(-(2**63), 2**63 - 1) == 64
-    rt, _ = infer_read_schema(
-        '{"title": "R", "type": "object", "required": ["i"], "properties": '
-        '{"i": {"type": "integer", "minimum": -2147483648, "maximum": 2147483647}}}'
-    )
-    assert rt.fields[0].type == PrimitiveType("int")

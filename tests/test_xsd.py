@@ -258,3 +258,17 @@ def test_xsd_write_schema_resolution_failures():
         '{"name":"maybe","type":["null","string"]}]}'
     )
     assert len(r.resolve_record(write, read3)) == 2
+
+
+def test_fixed_value_is_the_default():
+    """A `fixed` value is the only value an element takes, so it stands as
+    the default (XML Schema 1.0 Part 1 §3.3.1); test_default_values covers
+    the attribute."""
+    a = XsdAnalyzer(
+        '<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">'
+        '<xs:element name="Fixed"><xs:complexType><xs:sequence>'
+        '<xs:element name="unit" type="xs:string" fixed="kg"/>'
+        "</xs:sequence></xs:complexType></xs:element></xs:schema>"
+    )
+    f = fields(a.type_of("Fixed"))
+    assert f["unit"].default == "kg" and f["unit"].card == Card.REQUIRED
