@@ -1,14 +1,9 @@
 """Schema inference: observed data → suggested read schema + constraints.
 
-Re-expresses the reference's inference semantics:
-- DecimalRange interval algebra (opwvhk/avro/util/DecimalRange.java:20-209):
-  extend/restrict ranges, integerBitSize, requiredPrecision/Scale;
-- number-range → type election (opwvhk/avro/json/SchemaAnalyzer.java:177-207):
-  bitSize ≤ 32 → int, ≤ 64 → long, precision < 7 → float, < 16 → double,
-  else decimal(p,s);
-- schema lattice combine INTERSECT/UNION over types, required sets, enum
-  sets and ranges (SchemaAnalyzer.java:405-470) — used when merging
-  constraint specs (allOf/anyOf semantics).
+A numeric column's observed minimum and maximum form a
+``schema.model.NumberRange``, and ``schema.model.elect`` picks its type:
+the same range and election that JSON Schema and XSD use
+(opwvhk/avro/util/DecimalRange.java; json/SchemaAnalyzer.java:177-207).
 
 The *observation* side is one distributed aggregation pass; the election
 runs on the driver over the tiny aggregate row.
@@ -16,109 +11,19 @@ runs on the driver over the tiny aggregate row.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from decimal import Decimal
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from avro_conversions_spark.schema.model import (
-    DecimalType,
     EnumType,
     LogicalType,
+    NumberRange,
     PrimitiveType,
     ReadType,
+    elect,
 )
-
-INT32_MIN, INT32_MAX = -(2**31), 2**31 - 1
-INT64_MIN, INT64_MAX = -(2**63), 2**63 - 1
-
-
-@dataclass(frozen=True)
-class DecimalRange:
-    """Closed interval with exclusivity flags — the reference's interval
-    algebra (util/DecimalRange.java)."""
-
-    lower: Decimal
-    upper: Decimal
-    lower_exclusive: bool = False
-    upper_exclusive: bool = False
-
-    def extend_with(self, other: "DecimalRange") -> "DecimalRange":
-        """Union hull (DecimalRange.java:60-101)."""
-        if other.lower < self.lower:
-            lo, lox = other.lower, other.lower_exclusive
-        elif other.lower == self.lower:
-            lo, lox = self.lower, self.lower_exclusive and other.lower_exclusive
-        else:
-            lo, lox = self.lower, self.lower_exclusive
-        if other.upper > self.upper:
-            hi, hix = other.upper, other.upper_exclusive
-        elif other.upper == self.upper:
-            hi, hix = self.upper, self.upper_exclusive and other.upper_exclusive
-        else:
-            hi, hix = self.upper, self.upper_exclusive
-        return DecimalRange(lo, hi, lox, hix)
-
-    def restrict_to(self, other: "DecimalRange") -> "DecimalRange":
-        """Intersection (DecimalRange.java:109-150)."""
-        if other.lower > self.lower:
-            lo, lox = other.lower, other.lower_exclusive
-        elif other.lower == self.lower:
-            lo, lox = self.lower, self.lower_exclusive or other.lower_exclusive
-        else:
-            lo, lox = self.lower, self.lower_exclusive
-        if other.upper < self.upper:
-            hi, hix = other.upper, other.upper_exclusive
-        elif other.upper == self.upper:
-            hi, hix = self.upper, self.upper_exclusive or other.upper_exclusive
-        else:
-            hi, hix = self.upper, self.upper_exclusive
-        if lo > hi:
-            raise ValueError(f"empty range: [{lo},{hi}]")
-        return DecimalRange(lo, hi, lox, hix)
-
-    def integer_bit_size(self) -> int:
-        """Bits needed for the integer part (DecimalRange.java:177-185)."""
-        lo = int(self.lower) + (1 if self.lower_exclusive and self.lower == int(self.lower) else 0)
-        hi = int(self.upper) - (1 if self.upper_exclusive and self.upper == int(self.upper) else 0)
-        if INT32_MIN <= lo and hi <= INT32_MAX:
-            return 32
-        if INT64_MIN <= lo and hi <= INT64_MAX:
-            return 64
-        return 128
-
-    def required_precision(self) -> int:
-        """Digits to represent any value in range (DecimalRange.java:192-203)."""
-        digits = max(
-            len(str(abs(int(self.lower)))), len(str(abs(int(self.upper))))
-        )
-        return digits + self.required_scale()
-
-    def required_scale(self) -> int:
-        """(DecimalRange.java:205-209)."""
-        def scale_of(d: Decimal) -> int:
-            t = d.normalize().as_tuple()
-            return max(0, -t.exponent)
-
-        return max(scale_of(self.lower), scale_of(self.upper))
-
-
-def elect_numeric_type(rng: DecimalRange, is_integral: bool) -> ReadType:
-    """Range → Avro-style type (SchemaAnalyzer.java:177-207)."""
-    if is_integral and rng.required_scale() == 0:
-        bits = rng.integer_bit_size()
-        if bits <= 32:
-            return PrimitiveType("int")
-        if bits <= 64:
-            return PrimitiveType("long")
-        return DecimalType(rng.required_precision(), 0)
-    p = rng.required_precision()
-    if p < 7:
-        return PrimitiveType("float")
-    if p < 16:
-        return PrimitiveType("double")
-    return DecimalType(p, rng.required_scale())
 
 
 def observe_column(df: DataFrame, column: str, enum_max: int = 32) -> dict:
@@ -147,6 +52,14 @@ def observe_column(df: DataFrame, column: str, enum_max: int = 32) -> dict:
     return facts
 
 
+def _bound(v) -> Decimal | None:
+    """An observed minimum or maximum; a float drops the trailing zeros of
+    its text (``123456.0`` has precision 6)."""
+    if v is None:
+        return None
+    return Decimal(repr(v)).normalize() if isinstance(v, float) else Decimal(v)
+
+
 def suggest_read_type(df: DataFrame, column: str) -> tuple[ReadType, bool]:
     """Observed column → (suggested ReadType, nullable) — the analogue of
     JSON-Schema→Avro inference for already-typed tables."""
@@ -155,18 +68,10 @@ def suggest_read_type(df: DataFrame, column: str) -> tuple[ReadType, bool]:
     dtype = df.schema[column].dataType
     facts = observe_column(df, column)
     nullable = facts["nullable"]
-    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        if facts["min"] is None:
-            return PrimitiveType("long"), True
-        rng = DecimalRange(Decimal(int(facts["min"])), Decimal(int(facts["max"])))
-        return elect_numeric_type(rng, is_integral=True), nullable
-    if isinstance(dtype, (T.FloatType, T.DoubleType, T.DecimalType)):
-        if facts["min"] is None:
-            return PrimitiveType("double"), True
-        rng = DecimalRange(
-            Decimal(str(facts["min"])), Decimal(str(facts["max"]))
-        )
-        return elect_numeric_type(rng, is_integral=False), nullable
+    if isinstance(dtype, T.NumericType):
+        lo, hi = (_bound(facts[k]) for k in ("min", "max"))
+        rng = NumberRange(lo, lo is not None, hi, hi is not None)
+        return elect(rng, isinstance(dtype, T.IntegralType)), nullable
     if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
         kind = "local-timestamp-micros" if isinstance(dtype, T.TimestampNTZType) else "timestamp-micros"
         return LogicalType(kind), nullable

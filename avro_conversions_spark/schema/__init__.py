@@ -5,6 +5,7 @@ from avro_conversions_spark.schema.model import (  # noqa: F401
     Field,
     FixedType,
     LogicalType,
+    NumberRange,
     PrimitiveType,
     ReadType,
     RecordType,
@@ -13,7 +14,6 @@ from avro_conversions_spark.schema.model import (  # noqa: F401
 )
 from avro_conversions_spark.schema.json_schema import (  # noqa: F401
     AnalysisFailure,
-    NumberRange,
     SchemaProps,
     infer_read_schema,
     load_json_schema,

@@ -8,9 +8,9 @@ Ports the reference's SchemaAnalyzer semantics (drivers-side, plan-time):
   (anyOf/oneOf/dependentSchemas/if-then-else, array item schemata) over
   types, required sets, properties, enum sets and number ranges
   (json/SchemaAnalyzer.java:405-470);
-- DecimalRange with open bounds (util/DecimalRange.java:20-209);
-- Avro-type election: bit-size -> int/long, precision -> float/double,
-  else decimal(p,s) (json/SchemaAnalyzer.java:80-220);
+- number ranges with open bounds and their Avro-type election, shared
+  with XSD and observed data: ``model.NumberRange`` and ``model.elect``
+  (util/DecimalRange.java; json/SchemaAnalyzer.java:177-207);
 - title inference from $defs/definitions pointers
   (json/SchemaAnalyzer.java:51-55, 336-346).
 
@@ -30,19 +30,21 @@ from __future__ import annotations
 import json
 import re
 from dataclasses import dataclass, field
-from decimal import ROUND_DOWN, Decimal
+from decimal import Decimal
 
 from pyspark.sql import types as T
 
 from avro_conversions_spark.schema.model import (
     ArrayType,
-    DecimalType,
     EnumType,
     Field,
     LogicalType,
+    NumberRange,
     PrimitiveType,
     ReadType,
     RecordType,
+    elect,
+    to_spark_type,
 )
 
 
@@ -76,99 +78,6 @@ _NAME_IN_REFERENCE = re.compile(
     r"|if|then|else|prefixItems|items|additionalItems|contains)?$"
 )
 _NAME_FROM_ANY_ID = re.compile(rf".*/({_IDENT})$")
-
-
-# --------------------------------------------------------------------- range
-
-
-def signed_bit_length(d: Decimal) -> int:
-    """BigInteger.bitLength() of the integer part, plus the sign bit. The
-    length is two's complement, so -2**31 takes 32 bits like 2**31-1."""
-    n = int(d.to_integral_value(rounding=ROUND_DOWN))
-    return (n if n >= 0 else ~n).bit_length() + 1
-
-
-@dataclass(frozen=True)
-class NumberRange:
-    """Decimal range with optional (open) bounds — util/DecimalRange.java."""
-
-    lo: Decimal | None = None
-    lo_incl: bool = False
-    hi: Decimal | None = None
-    hi_incl: bool = False
-
-    @staticmethod
-    def _cmp(a: Decimal | None, b: Decimal | None, null_low: bool) -> int:
-        if a is None and b is None:
-            return 0
-        if a is None:
-            return -1 if null_low else 1
-        if b is None:
-            return 1 if null_low else -1
-        return -1 if a < b else (0 if a == b else 1)
-
-    @staticmethod
-    def _scale(d: Decimal) -> int:
-        return -d.as_tuple().exponent
-
-    def _pick(self, a, a_incl, b, b_incl, want_min: bool, null_low: bool, incl_or: bool):
-        cmp = self._cmp(a, b, null_low)
-        if cmp == 0:
-            if a is None:
-                return None, False
-            chosen = a if self._scale(a) > self._scale(b) else b
-            return chosen, (a_incl or b_incl) if incl_or else (a_incl and b_incl)
-        take_a = (cmp < 0) == want_min
-        return (a, a_incl) if take_a else (b, b_incl)
-
-    def extend_with(self, other: "NumberRange") -> "NumberRange":
-        lo, loi = self._pick(self.lo, self.lo_incl, other.lo, other.lo_incl,
-                             want_min=True, null_low=True, incl_or=True)
-        hi, hii = self._pick(self.hi, self.hi_incl, other.hi, other.hi_incl,
-                             want_min=False, null_low=False, incl_or=True)
-        return NumberRange(lo, loi, hi, hii)
-
-    def restrict_to(self, other: "NumberRange") -> "NumberRange":
-        lo, loi = self._pick(self.lo, self.lo_incl, other.lo, other.lo_incl,
-                             want_min=False, null_low=True, incl_or=False)
-        hi, hii = self._pick(self.hi, self.hi_incl, other.hi, other.hi_incl,
-                             want_min=True, null_low=False, incl_or=False)
-        return NumberRange(lo, loi, hi, hii)
-
-    def is_integer_range(self, allow_zero_fraction: bool) -> bool:
-        for b in (self.lo, self.hi):
-            if b is None:
-                continue
-            if allow_zero_fraction:
-                if b != b.to_integral_value(rounding=ROUND_DOWN):
-                    return False
-            elif self._scale(b) > 0:
-                return False
-        return True
-
-    def integer_bit_size(self) -> int:
-        """Bits to represent the integer bounds, or 0 if unbounded
-        (DecimalRange.java:177-185)."""
-        return max((signed_bit_length(b) for b in (self.lo, self.hi) if b is not None), default=0)
-
-    def required_scale(self) -> int:
-        return max((self._scale(b) for b in (self.lo, self.hi) if b is not None), default=0)
-
-    def required_precision(self) -> int:
-        s = self.required_scale()
-        prec = 0
-        for b in (self.lo, self.hi):
-            if b is not None:
-                q = b.quantize(Decimal(1).scaleb(-s))
-                prec = max(prec, len(q.as_tuple().digits))
-        return prec
-
-    def __str__(self) -> str:
-        return (
-            ("[" if self.lo_incl else "(") + ("-inf" if self.lo is None else str(self.lo))
-            + ", " + ("inf" if self.hi is None else str(self.hi))
-            + ("]" if self.hi_incl else ")")
-        )
 
 
 # --------------------------------------------------------------------- props
@@ -306,11 +215,23 @@ def _dec(v) -> Decimal | None:
     return None if v is None else Decimal(str(v))
 
 
+# the JSON type each keyword the walk reads must have
+_NUMBER = (int, float, Decimal)
+_KEYWORD_TYPES = {
+    "$ref": str, "type": (str, list), "minimum": _NUMBER, "maximum": _NUMBER,
+    "enum": list, "required": list, "properties": dict,
+    "allOf": list, "anyOf": list, "oneOf": list,
+}
+
+
 class _Analyzer:
     def __init__(self, root: dict, version: int):
         self.root = root
         self.version = version
         self.memo: dict[str, SchemaProps] = {}
+        # draft 4 writes exclusive bounds as flags, later drafts as numbers
+        excl = bool if version < D6 else _NUMBER
+        self.keyword_types = {**_KEYWORD_TYPES, "exclusiveMinimum": excl, "exclusiveMaximum": excl}
 
     def _resolve(self, pointer: str):
         if not pointer.startswith("#"):
@@ -341,6 +262,11 @@ class _Analyzer:
             node = {}
         if not isinstance(node, dict):
             raise AnalysisFailure(f"schema node at {pointer!r} is not an object")
+        for key, kinds in self.keyword_types.items():
+            v = node.get(key)
+            malformed = not isinstance(v, kinds) or isinstance(v, bool) and kinds is not bool
+            if key in node and malformed:
+                raise AnalysisFailure(f"malformed {key!r} at {pointer!r}: {v!r}")
         # $ref handling: a PURE $ref node (no sibling keywords beyond
         # comments) is identical to its target — same props object, so
         # recursion (droste) terminates as an identity cycle. Pre-2020
@@ -395,22 +321,18 @@ class _Analyzer:
                 mx, mx is not None and not node.get("exclusiveMaximum", False),
             )
 
-        # enum values incl. const for draft >= 6 (SchemaAnalyzer.java:365-373)
-        ev: list[str] = []
+        # enum values; from draft 6 a const INTERSECTs them
+        # (SchemaAnalyzer.java:365-373)
+        if "enum" in node:
+            props.enum_values = list(dict.fromkeys(map(_jstr, node["enum"])))
         if "const" in node and self.version >= D6:
-            ev.append(_jstr(node["const"]))
-        for v in node.get("enum") or ():
-            s = _jstr(v)
-            if s not in ev:
-                ev.append(s)
-        if ev:
-            props.enum_values = ev
+            c = _jstr(node["const"])
+            ev = props.enum_values
+            props.enum_values = [c] if ev is None or c in ev else []
 
         props.item_props = self._item_schema(node, pointer)
 
-        for r in node.get("required") or ():
-            if r not in props.required:
-                props.required.append(r)
+        props.required = list(dict.fromkeys(node.get("required", ())))
         for name, sub in (node.get("properties") or {}).items():
             props.properties[name] = self.walk(sub, f"{pointer}/properties/{name}")
 
@@ -440,7 +362,10 @@ class _Analyzer:
         for i, sub in enumerate(node.get("allOf") or ()):
             required_schemas.append(self.walk(sub, f"{pointer}/allOf/{i}"))
         for other in required_schemas:
-            combine("intersect", props, other)
+            try:
+                combine("intersect", props, other)
+            except ValueError as e:  # number ranges that do not overlap
+                raise AnalysisFailure(f"{e} at {pointer!r}") from e
 
         # infer additionally allowed types (SchemaAnalyzer.java:311-331)
         if props.properties:
@@ -598,24 +523,8 @@ def _as_read_type(props: SchemaProps, seen: dict[int, ReadType]) -> tuple[ReadTy
         if props.content_encoding in ("base16", "base64"):
             return PrimitiveType("bytes"), nullable
         return PrimitiveType("string"), nullable
-    if t == "integer":
-        bits = props.number_range.integer_bit_size()
-        if bits == 0:
-            return PrimitiveType("long"), nullable
-        if bits <= 32:
-            return PrimitiveType("int"), nullable
-        if bits <= 64:
-            return PrimitiveType("long"), nullable
-        return DecimalType(props.number_range.required_precision(), 0), nullable
-    if t == "number":
-        p = props.number_range.required_precision()
-        if p == 0:
-            return PrimitiveType("double"), nullable
-        if p < 7:
-            return PrimitiveType("float"), nullable
-        if p < 16:
-            return PrimitiveType("double"), nullable
-        return DecimalType(p, props.number_range.required_scale()), nullable
+    if t in ("integer", "number"):
+        return elect(props.number_range, t == "integer"), nullable
     return PrimitiveType("boolean"), nullable
 
 
@@ -639,9 +548,6 @@ def to_write_type(source: str | dict | SchemaProps) -> "object":
         seen = {**seen, id(p): True}
         t = _elected(p)
         nullable = p.is_nullable()
-        rng = p.number_range
-        lo = None if rng.lo is None else (float(rng.lo) if rng.lo % 1 else int(rng.lo))
-        hi = None if rng.hi is None else (float(rng.hi) if rng.hi % 1 else int(rng.hi))
         if t == "object":
             return WriteType(
                 T.StructType(), nullable,
@@ -659,18 +565,9 @@ def to_write_type(source: str | dict | SchemaProps) -> "object":
                 content_encoding=p.content_encoding,
                 symbols=tuple(p.enum_values) if p.enum_values is not None else None,
             )
-        if t == "integer":
-            bits = rng.integer_bit_size()
-            dtype = T.IntegerType() if 0 < bits <= 32 else (
-                T.LongType() if bits <= 64 else T.DecimalType(rng.required_precision(), 0)
-            )
-            return WriteType(dtype, nullable, min_value=lo, max_value=hi)
-        if t == "number":
-            prec = rng.required_precision()
-            dtype = T.DoubleType() if prec == 0 or 7 <= prec < 16 else (
-                T.FloatType() if prec < 7 else T.DecimalType(prec, rng.required_scale())
-            )
-            return WriteType(dtype, nullable, min_value=lo, max_value=hi)
+        if t in ("integer", "number"):
+            dtype = to_spark_type(elect(p.number_range, t == "integer"))
+            return WriteType(dtype, nullable, range=p.number_range)
         return WriteType(T.BooleanType(), nullable)
 
     def _nullable_unless_required(wt: "WriteType", name: str, parent: SchemaProps):

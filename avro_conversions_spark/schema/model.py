@@ -21,7 +21,8 @@ against an observed Spark schema on the driver, never shipped to executors.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from decimal import Decimal
 from typing import Any
 
 from pyspark.sql import types as T
@@ -142,6 +143,142 @@ class RecordType(ReadType):
 
 
 # ---------------------------------------------------------------------------
+# Number ranges and the one range -> type election
+# ---------------------------------------------------------------------------
+
+
+def _units(d: Decimal, scale: int, up: bool) -> int:
+    """``d`` in whole units of 10**-scale, rounded up or down; exact at any
+    number of digits."""
+    sign, digits, exp = d.as_tuple()
+    n = int("".join(map(str, digits)) or "0") * (-1 if sign else 1)
+    if exp + scale >= 0:
+        return n * 10 ** (exp + scale)
+    q, r = divmod(n, 10 ** -(exp + scale))
+    return q + 1 if up and r else q
+
+
+@dataclass(frozen=True)
+class NumberRange:
+    """Decimal range with optional (open) bounds and inclusivity flags —
+    util/DecimalRange.java. JSON Schema bounds, XSD facets and observed
+    column minima/maxima all become one of these."""
+
+    lo: Decimal | None = None
+    lo_incl: bool = False
+    hi: Decimal | None = None
+    hi_incl: bool = False
+
+    @staticmethod
+    def _cmp(a: Decimal | None, b: Decimal | None, null_low: bool) -> int:
+        if a is None and b is None:
+            return 0
+        if a is None:
+            return -1 if null_low else 1
+        if b is None:
+            return 1 if null_low else -1
+        return -1 if a < b else (0 if a == b else 1)
+
+    @staticmethod
+    def _scale(d: Decimal) -> int:
+        return max(0, -d.as_tuple().exponent)
+
+    def _pick(self, a, a_incl, b, b_incl, want_min: bool, null_low: bool, incl_or: bool):
+        cmp = self._cmp(a, b, null_low)
+        if cmp == 0:
+            if a is None:
+                return None, False
+            chosen = a if self._scale(a) > self._scale(b) else b
+            return chosen, (a_incl or b_incl) if incl_or else (a_incl and b_incl)
+        take_a = (cmp < 0) == want_min
+        return (a, a_incl) if take_a else (b, b_incl)
+
+    def extend_with(self, other: "NumberRange") -> "NumberRange":
+        """Union hull (DecimalRange.java:60-101)."""
+        lo, loi = self._pick(self.lo, self.lo_incl, other.lo, other.lo_incl,
+                             want_min=True, null_low=True, incl_or=True)
+        hi, hii = self._pick(self.hi, self.hi_incl, other.hi, other.hi_incl,
+                             want_min=False, null_low=False, incl_or=True)
+        return NumberRange(lo, loi, hi, hii)
+
+    def restrict_to(self, other: "NumberRange") -> "NumberRange":
+        """Intersection (DecimalRange.java:109-150); ValueError when no
+        number lies in both."""
+        lo, loi = self._pick(self.lo, self.lo_incl, other.lo, other.lo_incl,
+                             want_min=False, null_low=True, incl_or=False)
+        hi, hii = self._pick(self.hi, self.hi_incl, other.hi, other.hi_incl,
+                             want_min=True, null_low=False, incl_or=False)
+        if lo is not None and hi is not None and (lo > hi or lo == hi and not (loi and hii)):
+            raise ValueError(f"empty range: {self} and {other} do not overlap")
+        return NumberRange(lo, loi, hi, hii)
+
+    def is_integer_range(self, allow_zero_fraction: bool) -> bool:
+        for b in (self.lo, self.hi):
+            if b is None:
+                continue
+            if allow_zero_fraction:
+                if b != int(b):
+                    return False
+            elif self._scale(b) > 0:
+                return False
+        return True
+
+    def _ends(self, scale: int) -> tuple[int, ...]:
+        """The lowest and highest values in the range, in units of
+        10**-scale; an exclusive bound moves one unit inward. An open end
+        is left out."""
+        out = []
+        if self.lo is not None:
+            out.append(_units(self.lo, scale, up=self.lo_incl) + (0 if self.lo_incl else 1))
+        if self.hi is not None:
+            out.append(_units(self.hi, scale, up=not self.hi_incl) - (0 if self.hi_incl else 1))
+        return tuple(out)
+
+    def integer_bit_size(self) -> int:
+        """Two's-complement bits (BigInteger.bitLength() plus the sign) of
+        the integer ends, or 0 if unbounded (DecimalRange.java:177-185)."""
+        return max(((n if n >= 0 else ~n).bit_length() + 1 for n in self._ends(0)), default=0)
+
+    def required_scale(self) -> int:
+        return max((self._scale(b) for b in (self.lo, self.hi) if b is not None), default=0)
+
+    def precision_at(self, scale: int) -> int:
+        """Digits that hold every value of the range at ``scale``, or 0 if
+        unbounded (DecimalRange.java:192-203)."""
+        return max((len(str(abs(n))) for n in self._ends(scale)), default=0)
+
+    def required_precision(self) -> int:
+        return self.precision_at(self.required_scale())
+
+    def __str__(self) -> str:
+        return (
+            ("[" if self.lo_incl else "(") + ("-inf" if self.lo is None else str(self.lo))
+            + ", " + ("inf" if self.hi is None else str(self.hi))
+            + ("]" if self.hi_incl else ")")
+        )
+
+
+def elect(rng: NumberRange, integral: bool) -> ReadType:
+    """The type that holds every value of ``rng`` (json/SchemaAnalyzer.java:
+    177-207). An integral range takes int up to 32 bits, long up to 64, else
+    decimal(p,0); any other range takes float below precision 7, double
+    below 16, else decimal(p,s). Without bounds: long, or double."""
+    if integral:
+        bits = rng.integer_bit_size()
+        if 0 < bits <= 32:
+            return PrimitiveType("int")
+        if bits <= 64:
+            return PrimitiveType("long")
+        return DecimalType(rng.precision_at(0), 0)
+    p = rng.required_precision()
+    if 0 < p < 7:
+        return PrimitiveType("float")
+    if p < 16:
+        return PrimitiveType("double")
+    return DecimalType(p, rng.required_scale())
+
+
+# ---------------------------------------------------------------------------
 # Avro .avsc loading (so reference test fixtures translate 1:1)
 # ---------------------------------------------------------------------------
 
@@ -243,7 +380,8 @@ def to_spark_type(rt: ReadType, _seen: frozenset[int] = frozenset()) -> T.DataTy
     """The Spark type a resolved column will have (SURVEY.md §1.2 mapping).
 
     time-of-day types map to LongType micros-of-day (Spark has no TIME type);
-    local timestamps map to TimestampNTZType.
+    local timestamps map to TimestampNTZType; a decimal wider than 38 digits
+    maps to decimal(38, s).
 
     A recursive record (named-type self-reference, legal in .avsc) has no
     finite flat Spark type: raise a clear error instead of RecursionError,
@@ -268,7 +406,9 @@ def to_spark_type(rt: ReadType, _seen: frozenset[int] = frozenset()) -> T.DataTy
             return T.TimestampNTZType()
         return T.TimestampType()
     if isinstance(rt, DecimalType):
-        return T.DecimalType(rt.precision, rt.scale)
+        # Spark holds at most 38 digits; a wider Avro decimal keeps its
+        # scale, and values beyond 38 digits fail the read type's checks
+        return T.DecimalType(min(rt.precision, 38), rt.scale)
     if isinstance(rt, EnumType):
         return T.StringType()
     if isinstance(rt, FixedType):

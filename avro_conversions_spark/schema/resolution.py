@@ -13,7 +13,8 @@ Rule semantics ported (SURVEY.md §2.2 R1-R39):
 - widening int→long→float→double; lossy decimal→float/double and
   anything→string (doc/index.md:36-39); string rules ordered last
   (opwvhk/avro/json/JsonAsAvroParser.java:167);
-- integer bit-size election (util/DecimalRange.java:177-185);
+- integer width from the writer's declared range, elected by
+  ``model.elect`` (util/DecimalRange.java:177-185);
 - decimal precision/scale compatibility (json/JsonAsAvroParser.java:77-82)
   and *exact* scale semantics — RoundingMode.UNNECESSARY
   (io/AsAvroParserBase.java:457-462) becomes a regex scale/precision guard,
@@ -48,9 +49,11 @@ from avro_conversions_spark.schema.model import (
     Field,
     FixedType,
     LogicalType,
+    NumberRange,
     PrimitiveType,
     ReadType,
     RecordType,
+    elect,
     to_spark_type,
 )
 
@@ -74,8 +77,7 @@ class WriteType:
     format: str | None = None  # 'date' | 'time' | 'date-time' | 'local-date-time'
     content_encoding: str | None = None  # 'base16' | 'base64'
     symbols: tuple[str, ...] | None = None  # declared writer enum domain
-    min_value: float | int | None = None  # observed/declared numeric range
-    max_value: float | int | None = None
+    range: NumberRange | None = None  # observed/declared numeric range
     fields: dict[str, "WriteType"] = dc_field(default_factory=dict)  # struct members
     items: "WriteType | None" = None  # array element
 
@@ -87,7 +89,8 @@ def from_spark_schema(
 
     ``annotations`` adds per-column metadata keyed by top-level column name,
     e.g. {'role': {'symbols': ('user','assistant')},
-          'ts_str': {'format': 'date-time'}}.
+          'ts_str': {'format': 'date-time'},
+          'n': {'range': NumberRange(Decimal(0), True, Decimal(99), True)}}.
     """
     annotations = annotations or {}
 
@@ -96,8 +99,7 @@ def from_spark_schema(
             format=ann.get("format"),
             content_encoding=ann.get("content_encoding"),
             symbols=tuple(ann["symbols"]) if "symbols" in ann else None,
-            min_value=ann.get("min_value"),
-            max_value=ann.get("max_value"),
+            range=ann.get("range"),
         )
         if isinstance(dt, T.StructType):
             return WriteType(
@@ -180,19 +182,31 @@ def _is_integral(dt: T.DataType) -> bool:
     return isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType))
 
 
-def _int_bits(wt: WriteType) -> int:
-    """Bit size needed by the writer's integer range
-    (reference: util/DecimalRange.java:177-185). Unknown range → width of
-    the physical type."""
-    if wt.min_value is not None and wt.max_value is not None:
-        lo, hi = int(wt.min_value), int(wt.max_value)
-        if INT32_MIN <= lo and hi <= INT32_MAX:
-            return 32
-        if INT64_MIN <= lo and hi <= INT64_MAX:
-            return 64
-        return 128
-    return {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}.get(
-        type(wt.dtype), 128
+def _declares_range(wt: WriteType) -> bool:
+    return wt.range is not None and wt.range.lo is not None and wt.range.hi is not None
+
+
+def _writer_int(wt: WriteType) -> ReadType | None:
+    """The integer type that holds every value the writer may produce:
+    elected from its declared range (util/DecimalRange.java:177-185), else
+    its physical type's; None when neither bounds it."""
+    if _declares_range(wt):
+        return elect(wt.range, integral=True)
+    if _is_integral(wt.dtype):
+        return PrimitiveType("long" if isinstance(wt.dtype, T.LongType) else "int")
+    return None
+
+
+def _int_fits(w: WriteType, r: PrimitiveType) -> bool:
+    """An int writer fits a read int or long; a long writer a read long."""
+    return _writer_int(w) in (r, PrimitiveType("int"))
+
+
+def _int_failure(w: WriteType, r: PrimitiveType) -> ResolvingFailure:
+    declared = f" in {w.range}" if _declares_range(w) else ""
+    return ResolvingFailure(
+        f"writer integer {w.dtype.simpleString()}{declared} needs more bits than "
+        f"read type {r.kind} holds (util/DecimalRange.java:177-185)"
     )
 
 
@@ -201,7 +215,10 @@ def _decimal_required(wt: WriteType) -> tuple[int, int]:
     if isinstance(wt.dtype, T.DecimalType):
         return wt.dtype.precision, wt.dtype.scale
     if _is_integral(wt.dtype):
-        return (10, 0) if _int_bits(wt) <= 32 else (19, 0)
+        need = _writer_int(wt)
+        if isinstance(need, DecimalType):
+            return need.precision, 0
+        return (10, 0) if need == PrimitiveType("int") else (19, 0)
     return (38, 18)  # double/string: unconstrained without annotations
 
 
@@ -934,28 +951,20 @@ class SchemaResolver:
             # textual integers (tokenizer output / trust-reader): runtime
             # regex + overflow guard, honoring any declared writer range
             target = T.IntegerType() if r.kind == "int" else T.LongType()
-            if w.min_value is not None and w.max_value is not None:
-                bits = _int_bits(w)
-                if (r.kind == "int" and bits > 32) or bits > 64:
-                    raise ResolvingFailure(
-                        f"writer integer needs {bits} bits, read type {r.kind} is narrower"
-                    )
+            if _declares_range(w) and not _int_fits(w, r):
+                raise _int_failure(w, r)
             return _string_number_conv(target)
-        bits = _int_bits(w)
-        declared_range = w.min_value is not None and w.max_value is not None
+        fits = _int_fits(w, r)
         if r.kind == "int":
-            if bits > 32 and self.trust_reader and not declared_range:
+            if not fits and self.trust_reader and not _declares_range(w):
                 return _int_range_conv(T.IntegerType(), INT32_MIN, INT32_MAX)
-            if bits > 32:
-                raise ResolvingFailure(
-                    f"writer integer needs {bits} bits, read type int holds 32 "
-                    "(util/DecimalRange.java:177-185)"
-                )
+            if not fits:
+                raise _int_failure(w, r)
             if isinstance(w.dtype, (T.LongType, T.DecimalType)):
                 return _int_range_conv(T.IntegerType(), INT32_MIN, INT32_MAX)
             return _cast_conv(T.IntegerType())
-        if bits > 64:
-            raise ResolvingFailure(f"writer integer needs {bits} bits, read type long holds 64")
+        if not fits:
+            raise _int_failure(w, r)
         if isinstance(w.dtype, T.DecimalType) and w.dtype.scale == 0:
             return _int_range_conv(T.LongType(), INT64_MIN, INT64_MAX)
         return _cast_conv(T.LongType())

@@ -4,8 +4,9 @@ Re-expresses the reference's XSD analysis semantics in idiomatic Python
 over ``xml.etree`` (the reference drives Apache ws-commons XmlSchemaWalker;
 we walk the document directly — same outputs, different machinery):
 
-- scalar mapping incl. the decimal facet math (fractionDigits/totalDigits/
-  min/max bounds ± ULP -> precision/scale/bit-size election)
+- scalar mapping; number facets (fractionDigits/totalDigits/min/max)
+  translate to a ``model.NumberRange`` that ``model.elect`` sizes, the
+  same election as JSON Schema and observed data
   (xml/TypeBuildingVisitor.java:174-264);
 - cardinality stack: particle minOccurs/maxOccurs + nillable, group
   adjustment (choice members optional, repeated groups make children
@@ -20,9 +21,11 @@ we walk the document directly — same outputs, different machinery):
 - recursion-safe named-type registry: types traverse once, repeated use
   references the same instance (TypeStructureBuilder.java docs).
 
-Outputs: an ``XStruct``/scalar tree, plus converters to
+Outputs: an ``XStruct`` tree whose leaves are text scalars (``XScalar``),
+enums, and booleans and numbers as their elected ``ReadType``, plus
+converters to
 - ``WriteType`` (declared write schema for SchemaResolver — formats,
-  encodings, symbols, int widths annotated), and
+  encodings, symbols annotated), and
 - ``ReadType`` (Avro election parity with datamodel/*.toSchema()).
 """
 
@@ -30,21 +33,23 @@ from __future__ import annotations
 
 import enum
 from dataclasses import dataclass, field
-from decimal import ROUND_HALF_UP, Decimal
+from decimal import MAX_PREC, ROUND_HALF_UP, Context, Decimal
 from xml.etree import ElementTree as ET
 
 from pyspark.sql import types as T
 
-from avro_conversions_spark.schema.json_schema import signed_bit_length
 from avro_conversions_spark.schema.model import (
     ArrayType,
     DecimalType,
     EnumType,
     Field,
     LogicalType,
+    NumberRange,
     PrimitiveType,
     ReadType,
     RecordType,
+    elect,
+    to_spark_type,
 )
 
 XSNS = "http://www.w3.org/2001/XMLSchema"
@@ -75,17 +80,9 @@ class Card(enum.IntEnum):
 
 @dataclass(frozen=True)
 class XScalar:
-    kind: str  # boolean|float|double|date|datetime|time|string|binary_hex|binary_base64
+    """A value written as text: its write type is a string."""
 
-
-@dataclass(frozen=True)
-class XDecimal:
-    """Integer (scale 0, sized by bits) or fixed-point decimal
-    (xml/datamodel/DecimalType.java)."""
-
-    bits: int
-    precision: int
-    scale: int = 0
+    kind: str  # date|datetime|time|string|binary_hex|binary_base64
 
 
 @dataclass(frozen=True)
@@ -112,13 +109,10 @@ class XStruct:
     unparsed: bool = False  # TypeWithUnparsedContent
 
 
-INT_TYPE = XDecimal(32, 10)
-LONG_TYPE = XDecimal(64, 19)
-
 _BUILTIN_SCALARS = {
-    "boolean": XScalar("boolean"),
-    "float": XScalar("float"),
-    "double": XScalar("double"),
+    "boolean": PrimitiveType("boolean"),
+    "float": PrimitiveType("float"),
+    "double": PrimitiveType("double"),
     "date": XScalar("date"),
     "dateTime": XScalar("datetime"),
     "time": XScalar("time"),
@@ -134,24 +128,32 @@ _BUILTIN_SCALARS = {
     "IDREF": XScalar("string"),
     "hexBinary": XScalar("binary_hex"),
     "base64Binary": XScalar("binary_base64"),
-    "int": INT_TYPE,
-    "byte": INT_TYPE,
-    "short": INT_TYPE,
-    "unsignedByte": INT_TYPE,
-    "unsignedShort": INT_TYPE,
-    "long": LONG_TYPE,
-    "unsignedInt": LONG_TYPE,
 }
-# decimal-family built-ins elect via facets; the integer family carries an
-# implicit fractionDigits=0 (TypeBuildingVisitor.java:198-240)
+
+
+def _integers(lo: int | None, hi: int | None) -> dict:
+    """The facets of a built-in integer type: fractionDigits=0 and its
+    value bounds (TypeBuildingVisitor.java:198-240)."""
+    bounds = {"minInclusive": lo, "maxInclusive": hi}
+    return {"fractionDigits": "0", **{k: str(v) for k, v in bounds.items() if v is not None}}
+
+
+# decimal-family built-ins elect via their facets
 _DECIMAL_FAMILY = {
     "decimal": {},
-    "integer": {"fractionDigits": "0"},
-    "nonNegativeInteger": {"fractionDigits": "0", "minInclusive": "0"},
-    "positiveInteger": {"fractionDigits": "0", "minInclusive": "1"},
-    "nonPositiveInteger": {"fractionDigits": "0", "maxInclusive": "0"},
-    "negativeInteger": {"fractionDigits": "0", "maxInclusive": "-1"},
-    "unsignedLong": {"fractionDigits": "0", "minInclusive": "0"},
+    "integer": _integers(None, None),
+    "nonNegativeInteger": _integers(0, None),
+    "positiveInteger": _integers(1, None),
+    "nonPositiveInteger": _integers(None, 0),
+    "negativeInteger": _integers(None, -1),
+    "long": _integers(-(2**63), 2**63 - 1),
+    "int": _integers(-(2**31), 2**31 - 1),
+    "short": _integers(-(2**15), 2**15 - 1),
+    "byte": _integers(-(2**7), 2**7 - 1),
+    "unsignedLong": _integers(0, 2**64 - 1),
+    "unsignedInt": _integers(0, 2**32 - 1),
+    "unsignedShort": _integers(0, 2**16 - 1),
+    "unsignedByte": _integers(0, 2**8 - 1),
 }
 
 _FACET_NAMES = (
@@ -196,48 +198,37 @@ def _doc(el: ET.Element | None) -> str | None:
     return out or None
 
 
-def _elect_decimal(facets: dict) -> object:
-    """The reference's decimal facet math (TypeBuildingVisitor.java:198-240):
-    rounds bounds to the scale (HALF_UP), nudges exclusive bounds one ULP
-    inward, sizes integers by bit length, falls back to double when the
-    precision is unconstrained."""
+# bounds and their rounding keep every digit
+_EXACT = Context(prec=MAX_PREC)
+_BOUND_FACETS = {
+    "minInclusive": lambda d: NumberRange(d, True),
+    "minExclusive": lambda d: NumberRange(d, False),
+    "maxInclusive": lambda d: NumberRange(hi=d, hi_incl=True),
+    "maxExclusive": lambda d: NumberRange(hi=d),
+}
+
+
+def _elect_decimal(facets: dict) -> ReadType:
+    """Number facets -> the elected type (TypeBuildingVisitor.java:198-240).
+    The facets translate to one range, the intersection of what each
+    allows: bounds round HALF_UP to fractionDigits, and totalDigits t
+    allows ±(10**t - 1) units of the scale. fractionDigits=0 makes the range
+    integral; fractionDigits > 0 declares decimal(p, fractionDigits) once
+    the range bounds p."""
     frac = facets.get("fractionDigits")
-    if frac is None:
-        return XScalar("double")
-    frac = int(frac)
-    total = facets.get("totalDigits")
-    total = int(total) if total is not None else None
-    ulp = Decimal(1).scaleb(-frac)
-    q = Decimal(1).scaleb(-frac)
-
-    def rnd(s: str) -> Decimal:
-        return Decimal(s).quantize(q, rounding=ROUND_HALF_UP)
-
-    bounds: list[Decimal] = []
-    if facets.get("minInclusive") is not None:
-        bounds.append(rnd(facets["minInclusive"]))
-    if facets.get("minExclusive") is not None:
-        bounds.append(rnd(facets["minExclusive"]) + ulp)
-    if facets.get("maxInclusive") is not None:
-        bounds.append(rnd(facets["maxInclusive"]))
-    if facets.get("maxExclusive") is not None:
-        bounds.append(rnd(facets["maxExclusive"]) - ulp)
-    max_digits = (Decimal(10) ** total - ulp) if total is not None else None
-
-    digit_candidates = [total] if total is not None else []
-    digit_candidates += [len(b.as_tuple().digits) for b in bounds]
-    digits = max(digit_candidates, default=None)
-    if frac > 0:
-        if digits is None:
-            return XScalar("double")  # scale without precision -> double
-        return XDecimal(2**31 - 1, digits, frac)
-    sized = bounds + ([max_digits, -max_digits] if max_digits is not None else [])
-    bits = max((signed_bit_length(b) for b in sized), default=64)
-    if bits <= 32:
-        return INT_TYPE
-    if bits <= 64:
-        return LONG_TYPE
-    return XDecimal(bits, digits if digits is not None else 2**31 - 1, 0)
+    scale = None if frac is None else int(frac)
+    rng = NumberRange()
+    for name, bound in _BOUND_FACETS.items():
+        if facets.get(name) is not None:
+            d = Decimal(facets[name])
+            if scale is not None:
+                d = d.quantize(Decimal(1).scaleb(-scale), ROUND_HALF_UP, _EXACT)
+            rng = rng.restrict_to(bound(d))
+    if facets.get("totalDigits") is not None:
+        most = Decimal(f"{10 ** int(facets['totalDigits']) - 1}E-{scale or 0}")
+        rng = rng.restrict_to(NumberRange(most.copy_negate(), True, most, True))
+    p = rng.required_precision()
+    return DecimalType(p, scale) if scale and p else elect(rng, integral=scale == 0)
 
 
 class XsdAnalyzer:
@@ -400,7 +391,7 @@ class XsdAnalyzer:
             else:
                 xtype = XScalar("string")  # untyped element: raw text
         default = el.get("default", el.get("fixed"))
-        if default is not None and isinstance(xtype, (XScalar, XDecimal, XEnum)):
+        if default is not None and isinstance(xtype, (XScalar, ReadType, XEnum)):
             default = self._parse_default(xtype, default)
         else:
             default = None
@@ -408,13 +399,10 @@ class XsdAnalyzer:
 
     @staticmethod
     def _parse_default(xtype, raw: str):
-        if isinstance(xtype, XDecimal):
-            return int(raw) if xtype.scale == 0 and xtype.bits <= 64 else raw
-        if isinstance(xtype, XScalar):
+        if isinstance(xtype, PrimitiveType):
             if xtype.kind == "boolean":
                 return raw in ("true", "1")
-            if xtype.kind == "float" or xtype.kind == "double":
-                return float(raw)
+            return int(raw) if xtype.kind in ("int", "long") else float(raw)
         return raw
 
     # ------------------------------------------------------------- complexes
@@ -621,12 +609,8 @@ class XsdAnalyzer:
         terminal = _BUILTIN_SCALARS.get(base)
         if terminal is None:
             raise ValueError(f"Unsupported simple type base {base!r}")
-        if isinstance(terminal, XScalar) and terminal.kind == "string" and "enumeration" in facets:
+        if terminal == XScalar("string") and "enumeration" in facets:
             return XEnum(self._class_name(class_name), tuple(facets["enumeration"]))
-        if isinstance(terminal, XDecimal):
-            merged = {"fractionDigits": "0"}
-            merged.update({k: v for k, v in facets.items() if k != "enumeration"})
-            return _elect_decimal(merged)
         return terminal
 
 
@@ -642,11 +626,10 @@ def to_read_type(xt) -> ReadType:
 def _to_read(xt, seen: dict[int, ReadType]) -> ReadType:
     if id(xt) in seen:
         return seen[id(xt)]
+    if isinstance(xt, ReadType):
+        return xt
     if isinstance(xt, XScalar):
         return {
-            "boolean": PrimitiveType("boolean"),
-            "float": PrimitiveType("float"),
-            "double": PrimitiveType("double"),
             "date": LogicalType("date"),
             "datetime": LogicalType("timestamp-millis"),
             "time": LogicalType("time-millis"),
@@ -654,12 +637,6 @@ def _to_read(xt, seen: dict[int, ReadType]) -> ReadType:
             "binary_hex": PrimitiveType("bytes"),
             "binary_base64": PrimitiveType("bytes"),
         }[xt.kind]
-    if isinstance(xt, XDecimal):
-        if xt.bits <= 32:
-            return PrimitiveType("int")
-        if xt.bits <= 64:
-            return PrimitiveType("long")
-        return DecimalType(xt.precision, xt.scale)
     if isinstance(xt, XEnum):
         return EnumType(xt.name, xt.symbols)
     if isinstance(xt, XStruct):
@@ -689,7 +666,8 @@ def _to_read(xt, seen: dict[int, ReadType]) -> ReadType:
 
 def to_write_type(xt) -> "object":
     """XSD type tree -> annotated WriteType (declared write schema for
-    SchemaResolver: string formats/encodings, enum symbols, int widths)."""
+    SchemaResolver: string formats/encodings, enum symbols; a number's
+    dtype is that of its elected type)."""
     from avro_conversions_spark.schema.resolution import WriteType
 
     def build(t, card: Card, seen: dict[int, object]) -> "WriteType":
@@ -706,19 +684,9 @@ def to_write_type(xt) -> "object":
                 "binary_hex": {"content_encoding": "base16"},
                 "binary_base64": {"content_encoding": "base64"},
             }.get(t.kind, {})
-            dtype = {
-                "boolean": T.BooleanType(),
-                "float": T.FloatType(),
-                "double": T.DoubleType(),
-            }.get(t.kind, T.StringType())
-            wt = WriteType(dtype, nullable, **meta)
-        elif isinstance(t, XDecimal):
-            dtype = (
-                T.IntegerType() if t.bits <= 32
-                else T.LongType() if t.bits <= 64
-                else T.DecimalType(min(t.precision, 38), t.scale)
-            )
-            wt = WriteType(dtype, nullable)
+            wt = WriteType(T.StringType(), nullable, **meta)
+        elif isinstance(t, ReadType):
+            wt = WriteType(to_spark_type(t), nullable)
         elif isinstance(t, XEnum):
             wt = WriteType(T.StringType(), nullable, symbols=t.symbols)
         elif isinstance(t, XStruct):

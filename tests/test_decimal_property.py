@@ -10,7 +10,7 @@ integer part needs at most ``p - s`` digits.
 
 from __future__ import annotations
 
-from decimal import Decimal, InvalidOperation, localcontext
+from decimal import MAX_EMAX, MIN_EMIN, Decimal, InvalidOperation, localcontext
 
 import pytest
 from hypothesis import HealthCheck, example, given, settings
@@ -34,6 +34,7 @@ def py_fits(v: str, p: int, s: int) -> bool:
     # Use a context wide enough for any generated mantissa+exponent.
     with localcontext() as ctx:
         ctx.prec = 500
+        ctx.Emax, ctx.Emin = MAX_EMAX, MIN_EMIN  # '1E1000000' must not overflow
         t = d.normalize()
     digits, exp = t.as_tuple().digits, t.as_tuple().exponent
     frac_digits = max(0, -exp)
@@ -82,6 +83,7 @@ _garbage = st.text(
 @example(vals=["0e10", "0E-10", "-0.00e5", "0.000"])
 @example(vals=["12.30", "12.300", "1e2", "0.1e1", "99999999999999999999.999"])
 @example(vals=[" 1.0", "1.0 ", "1_0", "+", "-", ".", "e5", "1.2.3", ""])
+@example(vals=["1E1000000", "1E-1000000", "0E1000000"])
 def test_textual_decimal_matches_python_decimal(spark, p, s, vals):
     from avro_conversions_spark.schema.resolution import decimal_roundtrip_ok
 

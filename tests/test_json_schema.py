@@ -11,6 +11,7 @@ from decimal import Decimal
 from pathlib import Path
 
 import pytest
+from pyspark.sql import types as T
 
 from avro_conversions_spark.schema import (
     AnalysisFailure,
@@ -204,11 +205,9 @@ def test_write_type_from_json_schema():
        "score": {"type": "number", "minimum": 0, "maximum": 1.5}
      }}"""
     )
-    from pyspark.sql import types as T
-
     f = wt.fields
     assert isinstance(f["event_id"].dtype, T.LongType)
-    assert (f["event_id"].min_value, f["event_id"].max_value) == (0, 9000000000)
+    assert f["event_id"].range == NumberRange(Decimal(0), True, Decimal(9000000000), True)
     assert not f["event_id"].nullable and f["when"].nullable
     assert f["event_type"].symbols == ("view", "click")
     assert f["when"].format == "date-time"
@@ -220,10 +219,8 @@ def test_fractional_bounds_keep_every_digit():
     """Schema text parses fractions as Decimal: the bounds
     ±99999999999.999999 elect decimal(17,6) (util/DecimalRange.java), not
     the long that the float 100000000000.0 would give, and the write type
-    resolves against a read decimal(17,6). Numbers in a list or dict default
-    render as written."""
-    from pyspark.sql import types as T
-
+    keeps them as its range and resolves against a read decimal(17,6).
+    Numbers in a list or dict default render as written."""
     from avro_conversions_spark.schema import SchemaResolver
 
     text = """
@@ -238,6 +235,7 @@ def test_fractional_bounds_keep_every_digit():
      }}"""
     wt = to_write_type(text)
     assert wt.fields["fixedPoint"].dtype == T.DecimalType(17, 6)
+    assert wt.fields["fixedPoint"].range.hi == Decimal("99999999999.999999")
     read, _ = from_avsc(
         '{"type":"record","name":"Amounts","fields":[{"name":"fixedPoint","type":'
         '{"type":"bytes","logicalType":"decimal","precision":17,"scale":6}}]}'
@@ -249,3 +247,59 @@ def test_fractional_bounds_keep_every_digit():
     assert props["weights"].default == "[1.5, 2]"
     assert props["limits"].default == '[{"hi"=99999999999.999999}]'
 
+
+
+def test_exclusive_integer_bound_resolves_against_int():
+    """An exclusive integer bound sizes the write type as every other path
+    does: [0, 2**31) is an int and resolves against a read int."""
+    from avro_conversions_spark.schema import SchemaResolver
+
+    wt = to_write_type(
+        '{"$schema": "http://json-schema.org/draft-07/schema#", "title": "R",'
+        ' "type": "object", "required": ["x"], "properties":'
+        ' {"x": {"type": "integer", "minimum": 0, "exclusiveMaximum": 2147483648}}}'
+    )
+    conv = SchemaResolver().resolve(wt.fields["x"], PrimitiveType("int"))
+    assert conv.spark_type == T.IntegerType()
+
+
+def test_const_beside_enum_intersects():
+    """From draft 6 a const beside an enum in one node INTERSECTs it, as
+    allOf [{const}, {enum}] does; a const outside the enum leaves none."""
+    doc = '{"$schema": "http://json-schema.org/draft-06/schema#", %s}'
+    assert load_json_schema(doc % '"const": "yes", "enum": ["yes", "no"]').enum_values == ["yes"]
+    assert load_json_schema(doc % '"const": "maybe", "enum": ["yes", "no"]').enum_values == []
+    assert load_json_schema(doc % '"const": "yes"').enum_values == ["yes"]
+
+
+@pytest.mark.parametrize(
+    "node",
+    [
+        '{"minimum": "abc"}',
+        '{"exclusiveMinimum": true}',  # the draft-4 form, under draft 7
+        '{"enum": "xyz"}',
+        '{"type": "object", "required": "ab"}',
+    ],
+    ids=["minimum", "draft4-exclusive", "enum", "required"],
+)
+def test_malformed_keyword_names_the_pointer(node):
+    """A keyword of the wrong JSON type is an AnalysisFailure at its node."""
+    with pytest.raises(AnalysisFailure, match="#/properties/x"):
+        load_json_schema(
+            '{"$schema": "http://json-schema.org/draft-07/schema#",'
+            f' "title": "R", "type": "object", "properties": {{"x": {node}}}}}'
+        )
+
+
+def test_benchmark_turn_read_type():
+    """The read type the parse_documents benchmark workload stages from
+    ``benchmark.inputs.TURN_SCHEMA`` (its plan depends on this type)."""
+    from benchmark import inputs
+
+    rt, nullable = infer_read_schema(inputs.TURN_SCHEMA)
+    f = {x.name: x for x in rt.fields}
+    assert not nullable and rt.name == "Turn"
+    assert f["turn_idx"].type == PrimitiveType("int")
+    assert f["role"].type == EnumType("Role", ("system", "user", "assistant", "tool"))
+    assert f["ts"].type == LogicalType("timestamp-millis")
+    assert [n for n in f if not f[n].nullable] == ["conv_id", "turn_idx", "role"]

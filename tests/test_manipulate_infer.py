@@ -8,18 +8,22 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from avro_conversions_spark.infer import (
-    DecimalRange,
-    elect_numeric_type,
-    suggest_read_type,
-)
+from avro_conversions_spark.infer import suggest_read_type
 from avro_conversions_spark.manipulate import (
     SchemaManipulator,
     convert_name,
     document_schema_markdown,
     validate_unique_names,
 )
-from avro_conversions_spark.schema.model import DecimalType, EnumType, PrimitiveType
+from avro_conversions_spark.schema import infer_read_schema
+from avro_conversions_spark.schema.model import (
+    DecimalType,
+    EnumType,
+    NumberRange,
+    PrimitiveType,
+    elect,
+)
+from avro_conversions_spark.schema.xsd import XsdAnalyzer, to_read_type
 
 
 def test_naming_conventions():
@@ -109,37 +113,96 @@ def test_unique_name_validation():
 # --- inference -------------------------------------------------------------
 
 
+def closed(lo, hi) -> NumberRange:
+    return NumberRange(Decimal(lo), True, Decimal(hi), True)
+
+
 def test_decimal_range_algebra():
     """util/DecimalRange.java:60-150 extend/restrict."""
-    a = DecimalRange(Decimal(0), Decimal(100))
-    b = DecimalRange(Decimal(-50), Decimal(50))
-    assert a.extend_with(b) == DecimalRange(Decimal(-50), Decimal(100))
-    assert a.restrict_to(b) == DecimalRange(Decimal(0), Decimal(50))
+    a = closed(0, 100)
+    b = closed(-50, 50)
+    assert a.extend_with(b) == closed(-50, 100)
+    assert a.restrict_to(b) == closed(0, 50)
     with pytest.raises(ValueError):
-        DecimalRange(Decimal(0), Decimal(1)).restrict_to(DecimalRange(Decimal(5), Decimal(9)))
+        closed(0, 1).restrict_to(closed(5, 9))
 
 
 def test_bit_size_and_type_election():
     """SchemaAnalyzer.java:177-207 + DecimalRange.java:177-209."""
-    assert elect_numeric_type(DecimalRange(Decimal(0), Decimal(1000)), True) == PrimitiveType("int")
-    assert elect_numeric_type(
-        DecimalRange(Decimal(0), Decimal(9_000_000_000)), True
-    ) == PrimitiveType("long")
-    assert isinstance(
-        elect_numeric_type(DecimalRange(Decimal(0), Decimal(10**21)), True), DecimalType
+    assert elect(closed(0, 1000), True) == PrimitiveType("int")
+    # an exclusive bound counts one unit inward: (-2**31-1, 0] holds ints
+    assert elect(NumberRange(Decimal(-(2**31) - 1), False, Decimal(0), True), True) == PrimitiveType("int")
+    assert elect(closed(0, 9_000_000_000), True) == PrimitiveType("long")
+    assert isinstance(elect(closed(0, 10**21), True), DecimalType)
+    assert elect(closed("0.5", "999.5"), False) == PrimitiveType("float")
+    assert elect(closed("0.123456789", "1.0"), False) == PrimitiveType("double")
+
+
+# (JSON Schema keywords, XSD restriction base and facets, observed column
+# type and values) for one range, and the type each path must elect
+_CROSS_PATH = {
+    "int-exclusive": (
+        {"type": "integer", "minimum": 0, "exclusiveMaximum": 2**31},
+        ("integer", {"minInclusive": 0, "maxExclusive": 2**31}),
+        ("long", [0, 2**31 - 1]),
+        PrimitiveType("int"),
+    ),
+    "precision-1": (
+        {"type": "number", "minimum": 0, "maximum": 0.5},
+        ("decimal", {"minInclusive": 0, "maxInclusive": "0.5"}),
+        ("double", [0.0, 0.5]),
+        PrimitiveType("float"),
+    ),
+    "int32": (
+        {"type": "integer", "minimum": -(2**31), "maximum": 2**31 - 1},
+        ("integer", {"minInclusive": -(2**31), "maxInclusive": 2**31 - 1}),
+        ("long", [-(2**31), 2**31 - 1]),
+        PrimitiveType("int"),
+    ),
+    "int64": (
+        {"type": "integer", "minimum": -(2**63), "maximum": 2**63 - 1},
+        ("integer", {"minInclusive": -(2**63), "maxInclusive": 2**63 - 1}),
+        ("long", [-(2**63), 2**63 - 1]),
+        PrimitiveType("long"),
+    ),
+    "unbounded-integer": (
+        {"type": "integer"},
+        ("integer", {}),
+        ("long", [None]),
+        PrimitiveType("long"),
+    ),
+    "wider-than-64-bits": (
+        {"type": "integer", "minimum": 0, "maximum": 10**20},
+        ("integer", {"minInclusive": 0, "maxInclusive": 10**20}),
+        ("decimal(38,0)", [Decimal(0), Decimal(10**20)]),
+        DecimalType(21, 0),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_CROSS_PATH))
+def test_one_election_for_every_path(spark, case):
+    """JSON Schema, XSD and observed data turn the same range into one
+    NumberRange and elect the same type from it."""
+    keywords, (base, facets), (dtype, values), want = _CROSS_PATH[case]
+    json_type, _ = infer_read_schema(
+        {"$schema": "http://json-schema.org/draft-07/schema#", **keywords}
     )
-    assert elect_numeric_type(
-        DecimalRange(Decimal("0.5"), Decimal("999.5")), False
-    ) == PrimitiveType("float")
-    assert elect_numeric_type(
-        DecimalRange(Decimal("0.123456789"), Decimal("1.0")), False
-    ) == PrimitiveType("double")
+    restriction = "".join(f'<xs:{k} value="{v}"/>' for k, v in facets.items())
+    xsd = (
+        '<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema"><xs:element name="n">'
+        f'<xs:simpleType><xs:restriction base="xs:{base}">{restriction}'
+        "</xs:restriction></xs:simpleType></xs:element></xs:schema>"
+    )
+    xsd_type = to_read_type(XsdAnalyzer(xsd).type_of("n"))
+    observed, _ = suggest_read_type(spark.createDataFrame([(v,) for v in values], f"n {dtype}"), "n")
+    assert (json_type, xsd_type, observed) == (want, want, want)
 
 
 def test_suggest_read_type(spark):
     df = spark.createDataFrame(
-        [(1, 5_000_000_000, "yes", None), (2, 1, "no", "x")],
-        "small int, big long, flag string, opt string",
+        [(1, 5_000_000_000, "yes", None, 0.0), (2, 1, "no", "x", 123456.0)],
+        "small int, big long, flag string, opt string, real double",
     )
     t, n = suggest_read_type(df, "small")
     assert t == PrimitiveType("int") and not n
@@ -149,3 +212,5 @@ def test_suggest_read_type(spark):
     assert isinstance(t, EnumType) and t.symbols == ("no", "yes")
     _, n = suggest_read_type(df, "opt")
     assert n  # observed null → nullable
+    t, _ = suggest_read_type(df, "real")
+    assert t == PrimitiveType("float")  # 123456.0 has six digits, not seven

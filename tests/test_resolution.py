@@ -6,10 +6,13 @@ xml/XmlResolvingTest.java:296-441, re-expressed as plan-time assertions.
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import types as T
 
 from avro_conversions_spark.schema import (
+    NumberRange,
     ResolvingFailure,
     SchemaResolver,
     from_avsc,
@@ -114,7 +117,7 @@ def test_too_short_integer_fails():
         resolve(
             S([T.StructField("x", T.LongType())]),
             read,
-            ann={"x": {"min_value": -9_000_000_000, "max_value": 9_000_000_000}},
+            ann={"x": {"range": NumberRange(Decimal(-9_000_000_000), True, Decimal(9_000_000_000), True)}},
             strict_nullability=False,
         )
 

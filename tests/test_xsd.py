@@ -10,9 +10,9 @@ from pathlib import Path
 
 import pytest
 
+from avro_conversions_spark.schema.model import DecimalType, PrimitiveType
 from avro_conversions_spark.schema.xsd import (
     Card,
-    XDecimal,
     XEnum,
     XScalar,
     XStruct,
@@ -54,8 +54,8 @@ def test_attributes_and_facet_integer_election(analyzer):
     0..100 integer restriction elects a 32-bit int."""
     t = analyzer.type_of("AttributesAndAnnotationWithoutDocs")
     f = fields(t)
-    assert f["id"].card == Card.REQUIRED and f["id"].type.bits <= 32
-    assert f["something"].card == Card.OPTIONAL and f["something"].type.bits <= 32
+    assert f["id"].card == Card.REQUIRED and f["id"].type == PrimitiveType("int")
+    assert f["something"].card == Card.OPTIONAL and f["something"].type == PrimitiveType("int")
 
 
 def test_simple_content_variants(analyzer):
@@ -155,11 +155,10 @@ def test_resolving_test_xsd_scalar_elections():
     t = a.type_of("outer")
     f = fields(t)
     inner = fields(f["inner"].type)
-    assert inner["numberInt"].type.bits <= 32
-    assert inner["numberLong"].type.bits <= 64
-    assert inner["numberUnbounded"].type == XDecimal(64, 19)  # integer -> long
-    huge = inner["numberHuge"].type
-    assert huge.bits > 64 and huge.precision == 80 and huge.scale == 0
+    assert inner["numberInt"].type == PrimitiveType("int")
+    assert inner["numberLong"].type == PrimitiveType("long")
+    assert inner["numberUnbounded"].type == PrimitiveType("long")  # integer -> long
+    assert inner["numberHuge"].type == DecimalType(80, 0)
     amount = fields(inner["amount"].type)
     assert amount["value"].type.scale == 2 and amount["value"].type.precision == 8
     assert amount["currency"].card == Card.OPTIONAL
@@ -272,3 +271,30 @@ def test_fixed_value_is_the_default():
     )
     f = fields(a.type_of("Fixed"))
     assert f["unit"].default == "kg" and f["unit"].card == Card.REQUIRED
+
+
+@pytest.mark.parametrize(
+    "base, facets, want",
+    [
+        # every facet narrows one range: the bounds inside totalDigits win
+        ("integer", '<xs:totalDigits value="80"/><xs:minInclusive value="0"/>'
+         '<xs:maxInclusive value="100"/>', PrimitiveType("int")),
+        # a built-in integer type is its value range
+        ("int", '<xs:enumeration value="1"/><xs:enumeration value="2"/>', PrimitiveType("int")),
+        ("unsignedLong", "", DecimalType(20, 0)),
+        # fractionDigits > 0 declares a fixed-point decimal
+        ("decimal", '<xs:fractionDigits value="2"/><xs:maxExclusive value="100"/>'
+         '<xs:minInclusive value="0"/>', DecimalType(4, 2)),
+    ],
+    ids=["total-and-bounds", "int-enumeration", "unsigned-long", "fixed-point"],
+)
+def test_number_facets_form_one_range(base, facets, want):
+    """XSD number facets translate to the intersection of what each allows
+    (FIXTURES.md §6), and the shared election sizes it."""
+    a = XsdAnalyzer(
+        '<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema"><xs:element name="n">'
+        f'<xs:simpleType><xs:restriction base="xs:{base}">{facets}'
+        "</xs:restriction></xs:simpleType></xs:element></xs:schema>"
+    )
+    assert a.type_of("n") == want
+
