@@ -3,7 +3,6 @@ from avro_conversions_spark.constraints.core import (  # noqa: F401
     decimal_fits,
     enum_in,
     fixed_length,
-    from_column_plans,
     not_null,
     parseable,
     range_check,

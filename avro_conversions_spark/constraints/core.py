@@ -30,7 +30,6 @@ from pyspark.sql import types as T
 
 from avro_conversions_spark.schema.model import ReadType
 from avro_conversions_spark.schema.resolution import (
-    ColumnPlan,
     ResolvingFailure,
     SchemaResolver,
     WriteType,
@@ -269,29 +268,6 @@ def parseable(
     )
 
 
-def from_column_plans(plans: Sequence[ColumnPlan]) -> list[RowConstraint]:
-    """Turn a resolved schema (SchemaResolver.resolve_record output) into
-    runtime constraints: one per column whose conversion can fail, plus
-    not-null for non-nullable fields without defaults."""
-    out: list[RowConstraint] = []
-    for p in plans:
-        if p.source is None:
-            continue
-        if not p.nullable and not (p.default is not ... and p.default is not None):
-            out.append(not_null(p.source, name=f"not_null({p.name})"))
-        if p.converter.violation is not None:
-            out.append(
-                RowConstraint(
-                    name=f"convert({p.name})",
-                    column=p.source,
-                    reason=p.converter.reason,
-                    predicate=p.converter.violation,
-                    repair=p.converter.convert,
-                )
-            )
-    return out
-
-
 __all__ = [
     "RowConstraint",
     "not_null",
@@ -302,6 +278,5 @@ __all__ = [
     "decimal_fits",
     "fixed_length",
     "parseable",
-    "from_column_plans",
     "from_spark_schema",
 ]

@@ -1,8 +1,9 @@
 """Referential integrity: values of a column must exist in a dimension.
 
 SURVEY.md §2.8: small dimension → broadcast left_anti join (no shuffle of
-the fact table); large dimension → sort-merge left_anti (AQE may still
-convert to broadcast at runtime if the built side turns out small).
+the fact table, so no skew); large dimension → sort-merge left_anti (AQE
+may still convert to broadcast at runtime if the built side turns out
+small, and its skew join splits a hot key's partition).
 
 An anti join's existence test ignores duplicate dimension keys, so the
 dimension is deduplicated only on the sort-merge path: there the join
@@ -25,18 +26,17 @@ class ReferentialConstraint:
     dim_column: str
     name: str = ""
     broadcast: bool = True
-    ignore_nulls: bool = True  # null FK is "absent", not dangling
-    reason: str = "DANGLING_REFERENCE"
 
     def __post_init__(self) -> None:
         if not self.name:
             self.name = f"ref({self.column})"
 
     def violations(self, df: DataFrame) -> DataFrame:
-        """Rows whose ``column`` value is absent from the dimension."""
+        """Rows whose non-null ``column`` value is absent from the dimension
+        (a null reference is absent, not dangling)."""
         dim = self.dim.select(F.col(self.dim_column).alias(self.column))
         dim = F.broadcast(dim) if self.broadcast else dim.dropDuplicates()
-        facts = df if not self.ignore_nulls else df.where(F.col(self.column).isNotNull())
+        facts = df.where(F.col(self.column).isNotNull())
         return facts.join(dim, on=self.column, how="left_anti")
 
     def violation_rows(self, df: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -44,6 +44,6 @@ class ReferentialConstraint:
             *key_cols,
             F.lit(self.name).alias("constraint"),
             F.lit(self.column).alias("column"),
-            F.lit(self.reason).alias("reason"),
+            F.lit("DANGLING_REFERENCE").alias("reason"),
             F.col(self.column).cast("string").alias("observed"),
         )

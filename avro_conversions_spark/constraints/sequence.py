@@ -32,33 +32,28 @@ class SequenceConstraint:
     idx_col: str = "turn_idx"
     ts_col: str | None = "ts"
     name: str = "sequence(conv_id,turn_idx)"
-    check_contiguous: bool = True
-    check_ts_monotone: bool = True
     start: int = 0  # first expected index (0 for transcripts, 1 for SQL-style)
 
     def violations(self, df: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
         """(conv, idx, [extra...,] constraint, column, reason, observed) rows.
         ``extra_cols`` (e.g. the engine's carried partition key) ride the
-        same window pass."""
+        same window pass. ``ts_col=None`` checks contiguity only."""
         w = Window.partitionBy(self.conv_col).orderBy(self.idx_col)
         cols = (
             [self.conv_col, self.idx_col]
             + ([self.ts_col] if self.ts_col else [])
             + list(extra_cols)
         )
-        out = df.select(*cols)
-        checks = []
-        if self.check_contiguous:
-            # turn_idx must equal its 0-based rank within the conversation
-            out = out.withColumn("_rn", F.row_number().over(w) - 1 + self.start)
-            obs = F.concat_ws("!=", F.col(self.idx_col).cast("string"), F.col("_rn").cast("string"))
-            checks.append(
-                (
-                    F.col(self.idx_col) != F.col("_rn"),
-                    violation_struct(self.name, self.idx_col, "NONCONTIGUOUS_TURN_IDX", obs),
-                )
+        # turn_idx must equal its 0-based rank within the conversation
+        out = df.select(*cols).withColumn("_rn", F.row_number().over(w) - 1 + self.start)
+        obs = F.concat_ws("!=", F.col(self.idx_col).cast("string"), F.col("_rn").cast("string"))
+        checks = [
+            (
+                F.col(self.idx_col) != F.col("_rn"),
+                violation_struct(self.name, self.idx_col, "NONCONTIGUOUS_TURN_IDX", obs),
             )
-        if self.check_ts_monotone and self.ts_col:
+        ]
+        if self.ts_col:
             out = out.withColumn("_prev_ts", F.lag(self.ts_col).over(w))
             obs = F.date_format(self.ts_col, TS_CANON_FMT)
             checks.append(

@@ -1,22 +1,19 @@
-"""Uniqueness of a (composite) key via salted two-phase aggregation.
+"""Uniqueness of a (composite) key via one partial-aggregated groupBy.
 
 The reference has no table-level operators (SURVEY.md §2.8); the north rule
 requires uniqueness of (conv_id, turn_idx) with explicit skew handling.
 
-Scale notes (100 TB, 1000 executors):
-- counting per composite key benefits from Spark's built-in partial
-  (map-side) aggregation, but a pathologically hot key would still funnel
-  all of its partial counts into one reducer. The salted two-phase plan
-  splits phase 1 by ``salt = pmod(xxhash64(all key cols, seed), S)`` so the
-  heaviest key spreads over S reducers, then phase 2 merges S partial
-  counts per key — a shuffle of |distinct keys| * S tiny rows.
-- with AQE on, skewed shuffle partitions are also split at runtime; the
-  explicit salt makes the plan robust even when AQE is off.
+Skew: ``groupBy(key).agg(count, min(part))`` plans a map-side partial
+aggregate before its one exchange, so each map task sends at most one row
+per distinct key it saw. A hot key's reducer input is therefore bounded by
+the number of map tasks, not by the key's row count, and AQE splits or
+coalesces the shuffle partitions at runtime. A salt on top of that adds an
+exchange and removes no skew.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -26,68 +23,23 @@ from pyspark.sql import functions as F
 class UniqueConstraint:
     columns: tuple[str, ...] = ("conv_id", "turn_idx")
     name: str = ""
-    # None = auto: salt only single-column keys. A COMPOSITE key like
-    # (conv_id, turn_idx) hash-partitions finely even when one conv_id is
-    # hot (turn_idx varies), so salting it just doubles the shuffle —
-    # measured 130 s vs 40 s on 42M rows. A SINGLE hot key (all its rows
-    # hash to one reducer) is where the two-phase salt earns its cost.
-    salt_buckets: int | None = None
-    reason: str = "DUPLICATE_KEY"
 
     def __post_init__(self) -> None:
         if not self.name:
             self.name = f"unique({','.join(self.columns)})"
-        if self.salt_buckets is None:
-            self.salt_buckets = 16 if len(self.columns) == 1 else 0
 
     def duplicate_keys(self, df: DataFrame, part_col: str | None = None) -> DataFrame:
-        """Keys occurring more than once, with their multiplicity.
-
-        Default path is hash-compacted two-phase (exact):
-        1. shuffle only xxhash64(key) — 8 bytes/row instead of the full
-          composite key (measured ~2.5× less shuffle I/O on 42M rows);
-          candidate hashes = those with count > 1 (rare);
-        2. semi-join the table on candidate hashes (AQE converts to
-          broadcast at runtime — the candidate set is tiny) and do the
-          EXACT groupBy on real columns over candidates only, which also
-          eliminates hash-collision false positives.
-
-        Spark's map-side partial aggregation already combines within each
-        input partition; the explicit salt phase (salt_buckets > 0) only
-        helps when a single key's partials overwhelm one reducer.
+        """Keys occurring more than once, with their multiplicity: one
+        partial-aggregated groupBy on the key columns, one shuffle.
 
         ``part_col``: optional partition-attribution column carried through
         the aggregation as ``min(part_col)`` — deterministic ("first
         partition lexicographically" containing the key), and free compared
         to any join-back (rides the same shuffle)."""
-        cols = list(self.columns)
-        pc = [part_col] if part_col else []
         p_aggs = [F.min(part_col).alias(part_col)] if part_col else []
-        if not self.salt_buckets:
-            h = F.xxhash64(*cols).alias("_kh")
-            cand = (
-                df.select(h)
-                .groupBy("_kh")
-                .agg(F.count(F.lit(1)).alias("_c"))
-                .where(F.col("_c") > 1)
-                .select("_kh")
-            )
-            candidates = df.select(*cols, *pc, h).join(cand, "_kh", "left_semi")
-            return (
-                candidates.groupBy(*cols)
-                .agg(F.count(F.lit(1)).alias("multiplicity"), *p_aggs)
-                .where(F.col("multiplicity") > 1)
-            )
-        salt = F.pmod(F.xxhash64(F.lit("dupsalt"), F.spark_partition_id()), F.lit(self.salt_buckets))
-        partial = (
-            df.select(*cols, *pc)
-            .withColumn("_salt", salt)
-            .groupBy(*cols, "_salt")
-            .agg(F.count(F.lit(1)).alias("_partial"), *p_aggs)
-        )
         return (
-            partial.groupBy(*cols)
-            .agg(F.sum("_partial").alias("multiplicity"), *p_aggs)
+            df.groupBy(*self.columns)
+            .agg(F.count(F.lit(1)).alias("multiplicity"), *p_aggs)
             .where(F.col("multiplicity") > 1)
         )
 
@@ -100,7 +52,7 @@ class UniqueConstraint:
             *([part_col] if part_col else []),
             F.lit(self.name).alias("constraint"),
             F.lit(",".join(self.columns)).alias("column"),
-            F.lit(self.reason).alias("reason"),
+            F.lit("DUPLICATE_KEY").alias("reason"),
             F.concat(F.lit("multiplicity="), F.col("multiplicity").cast("string")).alias(
                 "observed"
             ),

@@ -12,8 +12,10 @@ Execution shape (designed for 100 TB / 1000 executors; see SURVEY.md §3.3):
    (``constraints.core.row_violations``, shared with streaming). Catalyst
    prunes the scan to exactly the constrained + key columns and fuses the
    predicates into one WholeStageCodegen span. N constraints != N scans.
-3. aggregate passes: uniqueness (salted two-phase agg), referential
-   (broadcast/sort-merge anti join), sequence (per-conversation window) each
+3. aggregate passes: uniqueness (one partial-aggregated groupBy: a hot
+   key's reducer input is bounded by the map tasks), referential
+   (broadcast anti join, or sort-merge with AQE's skew join), sequence
+   (per-conversation window, bounded by conversation length) each
    contribute violation rows; their shuffles are keyed independently so AQE
    can size each exchange.
 4. verdicts: ONE aggregate over the union of the input's partition key
@@ -106,7 +108,7 @@ class ValidationEngine:
         key_cols = list(self.key_cols)
         extra = [part_col] if part_col else []
         for u in self.unique_constraints:
-            # partition attribution rides the existing two-phase aggregation
+            # partition attribution rides the uniqueness aggregation
             # (min(partition) per duplicated key) — no extra join, no extra
             # scan; deterministic "first partition lexicographically".
             v = u.violations(df, part_col=part_col)

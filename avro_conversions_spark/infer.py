@@ -11,6 +11,7 @@ runs on the driver over the tiny aggregate row.
 
 from __future__ import annotations
 
+import math
 from decimal import Decimal
 
 from pyspark.sql import DataFrame
@@ -32,7 +33,7 @@ def observe_column(df: DataFrame, column: str, enum_max: int = 32) -> dict:
     c = F.col(column)
     row = df.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(c.isNull(), 1).otherwise(0)).alias("nulls"),
+        F.count(F.when(c.isNull(), 1)).alias("nulls"),
         F.min(c).alias("mn"),
         F.max(c).alias("mx"),
         F.approx_count_distinct(c).alias("ndv"),
@@ -54,8 +55,9 @@ def observe_column(df: DataFrame, column: str, enum_max: int = 32) -> dict:
 
 def _bound(v) -> Decimal | None:
     """An observed minimum or maximum; a float drops the trailing zeros of
-    its text (``123456.0`` has precision 6)."""
-    if v is None:
+    its text (``123456.0`` has precision 6). None for no value, NaN or
+    ±Infinity."""
+    if v is None or isinstance(v, float) and not math.isfinite(v):
         return None
     return Decimal(repr(v)).normalize() if isinstance(v, float) else Decimal(v)
 
@@ -70,7 +72,10 @@ def suggest_read_type(df: DataFrame, column: str) -> tuple[ReadType, bool]:
     nullable = facts["nullable"]
     if isinstance(dtype, T.NumericType):
         lo, hi = (_bound(facts[k]) for k in ("min", "max"))
-        rng = NumberRange(lo, lo is not None, hi, hi is not None)
+        # without both finite ends the observed range is unknown (an empty
+        # column, or NaN/±Infinity hiding the finite extremes): unbounded
+        bounded = lo is not None and hi is not None
+        rng = NumberRange(lo, True, hi, True) if bounded else NumberRange()
         return elect(rng, isinstance(dtype, T.IntegralType)), nullable
     if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
         kind = "local-timestamp-micros" if isinstance(dtype, T.TimestampNTZType) else "timestamp-micros"

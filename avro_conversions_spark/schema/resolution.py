@@ -166,10 +166,6 @@ def _src(name: str) -> Column:
     return F.col(f"`{name}`") if "." in name else F.col(name)
 
 
-def _no_violation(_c: Column) -> Column:
-    return F.lit(False)
-
-
 def _identity(c: Column) -> Column:
     return c
 

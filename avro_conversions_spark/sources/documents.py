@@ -20,9 +20,9 @@ share one resolver base, io/AsAvroParserBase.java:369-398):
 2. ``_typed``: the schema resolver compiles the read schema against the
    flattened, alias-folded struct exactly like the reference's
    resolver-compile step, producing typed conversion Columns with
-   defaults/aliases/enum-substitution, and unparseable values become
-   `(column, reason)` violations instead of exceptions (V9: an engine
-   scanning 10^12 documents must not throw).
+   defaults/aliases/enum-substitution, and unparseable values and absent
+   required fields become `(column, reason)` violations instead of
+   exceptions (V9: an engine scanning 10^12 documents must not throw).
 
 ``parse_json_column`` and ``parse_xml_column`` differ only in the
 tokenizer function; ``parse_xml_with_xsd`` adds occurrence-array
@@ -50,7 +50,7 @@ from avro_conversions_spark.schema.model import (
     ReadType,
     RecordType,
 )
-from avro_conversions_spark.schema.resolution import SchemaResolver, from_spark_schema
+from avro_conversions_spark.schema.resolution import SchemaResolver, _src, from_spark_schema
 
 
 def _tokenizer_schema(rt: ReadType) -> T.DataType:
@@ -162,11 +162,18 @@ def _typed(
         _annotations(read, binary_encoding),
     )
     plans = SchemaResolver(strict_nullability=False, trust_reader=True).resolve_record(wt, read)
-    viols = [
-        _violation(vp, p.name, p.converter.reason or "UNPARSEABLE")
-        for p in plans
-        if (vp := p.violation_pred()) is not None
-    ]
+    viols = []
+    for p in plans:
+        if (vp := p.violation_pred()) is not None:
+            viols.append(_violation(vp, p.name, p.converter.reason or "UNPARSEABLE"))
+        if not p.nullable:
+            # V3/R28: a required field absent from the document (its token
+            # null, so a value the resolver rejected is not reported twice),
+            # unless a structural check already named it
+            missing = ~F.col("_corrupt") & _src(p.source).isNull() & p.value().isNull()
+            if struct_viols:
+                missing &= ~F.exists("_struct_viols", lambda x: x["column"] == p.name)
+            viols.append(_violation(missing, p.name, "MISSING_REQUIRED_FIELD"))
     arrays = [F.col("_struct_viols")] if struct_viols else []
     if viols:
         arrays.append(_non_null(viols))

@@ -8,6 +8,7 @@ to table validation (BASELINE.json per-row invariant).
 from __future__ import annotations
 
 import datetime
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -119,6 +120,17 @@ def test_verdict_plan_has_no_join_or_global_sort(spark, fixture_df):
     ):
         assert node not in plan, node
     res.unpersist()
+
+
+def test_duplicate_keys_is_one_shuffle(fixture_df):
+    """Uniqueness is one partial-aggregated groupBy: exactly one shuffle
+    exchange and no broadcast (no candidate pass, no salt phase)."""
+    dups = UniqueConstraint(("conv_id", "turn_idx")).duplicate_keys(fixture_df)
+    assert [tuple(r) for r in dups.collect()] == [("conv-b", 2, 2)]
+    # the executed adaptive plan prints its final plan before the initial one
+    plan = dups._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert len(re.findall(r"(?<!Broadcast)Exchange ", plan)) == 1, plan
+    assert "BroadcastExchange" not in plan, plan
 
 
 def test_run_is_deterministic(spark, fixture_df, result):

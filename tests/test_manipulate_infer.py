@@ -214,3 +214,24 @@ def test_suggest_read_type(spark):
     assert n  # observed null → nullable
     t, _ = suggest_read_type(df, "real")
     assert t == PrimitiveType("float")  # 123456.0 has six digits, not seven
+
+
+def test_suggest_read_type_on_empty_column(spark):
+    """No rows observed: the unbounded election, not nullable."""
+    df = spark.createDataFrame([], "i long, d double")
+    assert suggest_read_type(df, "i") == (PrimitiveType("long"), False)
+    assert suggest_read_type(df, "d") == (PrimitiveType("double"), False)
+
+
+@pytest.mark.parametrize(
+    "values",
+    [[0.5, float("nan")], [float("-inf"), 0.5], [float("inf"), 1.0, None]],
+    ids=["nan", "-inf", "inf"],
+)
+def test_suggest_read_type_non_finite_elects_double(spark, values):
+    """NaN sorts above +Infinity in Spark, so a non-finite minimum or
+    maximum hides the finite extremes: the range is unbounded."""
+    df = spark.createDataFrame([(v,) for v in values], "d double")
+    t, nullable = suggest_read_type(df, "d")
+    assert t == PrimitiveType("double")
+    assert nullable == (None in values)

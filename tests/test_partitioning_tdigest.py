@@ -1,4 +1,4 @@
-"""Skew-aware partitioning and t-digest quantile sketches."""
+"""Hot-key aggregation and t-digest quantile sketches."""
 
 from __future__ import annotations
 
@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from avro_conversions_spark import partitioning as P
+from avro_conversions_spark.constraints import UniqueConstraint
 from avro_conversions_spark.functions.tdigest import (
     build_digest,
     digest_quantile,
@@ -23,38 +23,14 @@ def skewed(spark):
     return transcripts(spark, n_convs=202, turns_per_conv=10, hot_convs=2, hot_factor=100)
 
 
-def test_hot_key_detection(spark, skewed):
-    hot = P.hot_keys(skewed, "conv_id", hot_threshold=0.01)
-    ids = {r.conv_id for r in hot.collect()}
-    assert ids == {"conv-00000000", "conv-00000001"}
-
-
-def test_salting_spreads_hot_keys(spark, skewed):
-    hot = P.hot_keys(skewed, "conv_id", hot_threshold=0.01)
-    salted = P.salt_column(skewed, "conv_id", hot, salt_buckets=8)
-    dist = (
-        salted.groupBy("conv_id", "_salt").count()
-        .groupBy("conv_id").agg(F.count(F.lit(1)).alias("n_salts"))
-    )
-    by_key = {r.conv_id: r.n_salts for r in dist.collect()}
-    assert by_key["conv-00000000"] == 8  # hot key spread over all buckets
-    assert by_key["conv-00000005"] == 1  # normal key stays together
-
-
-def test_repartition_skew_aware_partition_sizes(spark, skewed):
-    out = P.repartition_skew_aware(skewed, "conv_id", n_partitions=16, hot_threshold=0.01)
-    sizes = out.groupBy(F.spark_partition_id().alias("p")).count().collect()
-    total = sum(r["count"] for r in sizes)
-    biggest = max(r["count"] for r in sizes)
-    # without salting one partition would hold a whole hot conv (~1000 rows
-    # of ~4000 total); with salting the max partition stays well below that
-    assert biggest < 0.2 * total
-
-
-def test_salted_group_count_exact(spark, skewed):
-    got = {r.conv_id: r.n_rows for r in P.salted_group_count(skewed, "conv_id").collect()}
+def test_unique_multiplicity_exact_under_hot_key(spark, skewed):
+    """Two conversations hold 100x the turns of the rest; the partial
+    aggregate still counts every key exactly."""
+    dups = UniqueConstraint(("conv_id",)).duplicate_keys(skewed)
+    got = {r.conv_id: r.multiplicity for r in dups.collect()}
     want = {r.conv_id: r["count"] for r in skewed.groupBy("conv_id").count().collect()}
     assert got == want
+    assert got["conv-00000000"] == 1000
 
 
 # --- t-digest ---------------------------------------------------------------

@@ -123,13 +123,14 @@ def test_json_xml_parity(spark, read_schema, parse, render):
         {"i": 1, "id": 2, "name": "renamed", "amount": Decimal("1.50"),
          "when_": datetime.date(2024, 3, 4), "status": "ok", "tags": [],
          "added": "dflt", "_violations": [], "_corrupt": False},
-        # an absent enum field stays null: the enum default only replaces
-        # unknown symbols
+        # an absent enum field stays null and is reported: the enum default
+        # only replaces unknown symbols
         {"i": 2, "id": None, "name": "x", "amount": None, "when_": None, "status": None,
          "tags": [], "added": "dflt", "_corrupt": False, "_violations": [
              {"column": "id", "reason": "INVALID_INTEGER"},
              {"column": "amount", "reason": "DECIMAL_OUT_OF_RANGE"},
              {"column": "when_", "reason": "INVALID_DATE"},
+             {"column": "status", "reason": "MISSING_REQUIRED_FIELD"},
          ]},
     ]
 

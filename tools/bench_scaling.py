@@ -231,7 +231,7 @@ Generated by tools/bench_scaling.py on {stamp}.
 Input: deterministic synthetic transcript table ({n:,} turns,
 {n_convs:,} conversations incl. 2 hot ones at 100×, corruption knobs on),
 written to parquet once and validated via the full engine (not-null ×2,
-role enum, turn_idx range, salted uniqueness of (conv_id, turn_idx),
+role enum, turn_idx range, uniqueness of (conv_id, turn_idx),
 broadcast referential integrity of tool, per-conversation sequence +
 ts-monotonicity window), verdicts + violation rows both materialized.
 

@@ -21,21 +21,13 @@ sys.path.insert(0, REPO)
 
 DATA = "/tmp/bench_scaling_transcripts"
 
-STAGES = ["scan_only", "row_pass", "uniqueness", "referential", "sequence", "full"]
+# scan_only, then each family of benchmark.workloads.family_kwargs, then all
+STAGES = ["scan_only", "row", "unique", "referential", "sequence", "full"]
 
 
 def run_stage(stage: str, par: int) -> float:
-    from avro_conversions_spark.constraints import (
-        ReferentialConstraint,
-        SequenceConstraint,
-        UniqueConstraint,
-        enum_in,
-        not_null,
-        range_check,
-    )
-    from avro_conversions_spark.engine import ValidationEngine
     from avro_conversions_spark.session import get_spark
-    from avro_conversions_spark.transcripts import ROLES, tool_catalog
+    from benchmark.workloads import make_engine
 
     spark = get_spark(
         app_name=f"prof-{stage}-{par}",
@@ -44,20 +36,6 @@ def run_stage(stage: str, par: int) -> float:
         extra_conf={"spark.driver.extraJavaOptions": f"-XX:ActiveProcessorCount={par}"},
     )
     df = spark.read.parquet(DATA)
-    kw = {}
-    if stage in ("row_pass", "full"):
-        kw["row_constraints"] = [
-            not_null("conv_id"), not_null("turn_idx"),
-            enum_in("role", ROLES), range_check("turn_idx", 0, 2**31 - 1),
-        ]
-    if stage in ("uniqueness", "full"):
-        kw["unique_constraints"] = [UniqueConstraint(("conv_id", "turn_idx"))]
-    if stage in ("referential", "full"):
-        kw["referential_constraints"] = [
-            ReferentialConstraint("tool", tool_catalog(spark), "tool_name")
-        ]
-    if stage in ("sequence", "full"):
-        kw["sequence_constraints"] = [SequenceConstraint()]
 
     from pyspark.sql import functions as F
 
@@ -74,7 +52,8 @@ def run_stage(stage: str, par: int) -> float:
         spark.stop()
         return dt
 
-    eng = ValidationEngine(**kw)
+    # the benchmark's constraint set (benchmark.workloads.family_kwargs)
+    eng = make_engine(spark) if stage == "full" else make_engine(spark, (stage,))
     warm_df = df.where(F.pmod(F.xxhash64("conv_id"), F.lit(16)) == 0)
     w = eng.run(warm_df, run_id="warm")
     w.verdicts.collect(); w.violations.count(); w.unpersist()
